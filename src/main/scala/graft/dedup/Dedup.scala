@@ -705,7 +705,6 @@ object Dedup {
         spark.createDataset(out.toSeq).toDF("id", "comp")
       } else {
         import org.apache.spark.sql.expressions.Window
-        val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         // Large-star: group the symmetrized edge list by node u, let
         // m = min(Γ(u) ∪ {u}), re-attach every LARGER neighbor to m.
         // One window (= one exchange) over 2E rows; emits exactly one
@@ -749,11 +748,20 @@ object Dedup {
         // neighbor; a small-star fixpoint gives every node ≤ 1 distinct
         // smaller neighbor; together: stars, rooted at each component's
         // minimum since ops preserve connectivity). Each half-round is
-        // persisted, its edge+change counts read in ONE job, and the
-        // previous half-round's blocks freed immediately (same
-        // discipline as the r11 checkpoint loop this replaces).
+        // local-checkpointed lazily: the ONE job that reads its
+        // edge+change counts also materializes it, the previous
+        // half-round's blocks are freed right after (same discipline as
+        // the r11 checkpoint loop this replaces), and its plan starts
+        // flat. A persisted half-round instead kept the previous one's
+        // whole plan under its cache node, which AQE prints twice
+        // (initial and final): the plan description Spark builds and
+        // keeps for every job grew ~4x per round.
+        def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+          df.queryExecution.analyzed match {
+            case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+            case _ => None
+          }
         var cur = und.filter(col("src") =!= col("dst"))
-        var curCached: Option[DataFrame] = None
         var prevChanges = -1L
         var op = 0
         var converged = false
@@ -761,12 +769,12 @@ object Dedup {
           if (op % 2 == 0 && op / 2 >= maxIter)
             throw new IllegalStateException(
               s"connectedComponents did not converge in $maxIter rounds")
-          val next = (if (op % 2 == 0) largeStar(cur) else smallStar(cur)).persist(mem)
+          val next = (if (op % 2 == 0) largeStar(cur) else smallStar(cur))
+            .localCheckpoint(eager = false)
           val stats = next.agg(count(lit(1)),
             sum(when(col("chg"), 1L).otherwise(0L))).head()
           val changes = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-          curCached.foreach(_.unpersist(false))
-          curCached = Some(next)
+          ckptRdd(cur).foreach(_.unpersist(false))
           cur = next
           converged = changes == 0 && prevChanges == 0
           prevChanges = changes
@@ -788,7 +796,7 @@ object Dedup {
           members.union(selfIds.join(members.select("id"), Seq("id"), "left_anti"))
         }
         val out = all.localCheckpoint(true)
-        curCached.foreach(_.unpersist(false))
+        ckptRdd(cur).foreach(_.unpersist(false))
         out
       }
     } finally { und.unpersist(); () }

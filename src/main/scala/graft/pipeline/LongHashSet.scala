@@ -105,11 +105,13 @@ private[graft] object LongDoubleMap {
   /** Build from parallel key/value arrays (last write wins on a
     * duplicate key, which callers never produce). */
   def apply(ks: Array[Long], vs: Array[Double], default: Double): LongDoubleMap = {
-    require(ks.length == vs.length, "key/value arrays must align")
     // same 2^29 bound as LongHashSet: keep load factor ≤ 0.5 so a
-    // missing-key probe always terminates
+    // missing-key probe always terminates. Checked before alignment so
+    // an over-bound call is refused for its size, whatever values array
+    // it is given.
     require(ks.length <= (1 << 29),
       s"LongDoubleMap holds at most ${1 << 29} keys, got ${ks.length}")
+    require(ks.length == vs.length, "key/value arrays must align")
     var cap = 8
     while (cap < ks.length * 2 && cap < (1 << 30)) cap <<= 1
     val keys = new Array[Long](cap)

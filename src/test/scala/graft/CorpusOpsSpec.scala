@@ -510,13 +510,19 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("LongHashSet/LongDoubleMap: reject key counts past the 2^29 load-factor bound") {
     // a full table would loop forever on a missing key — the builders
-    // must refuse first (VERDICT r18). The 4 GiB input array is only
-    // allocated, never populated or hashed: require fires before the
-    // table is built.
+    // must refuse first (VERDICT r18). The one Long array of
+    // (1 << 29) + 1 entries (4 GiB) is the only large allocation: it is
+    // never populated or hashed, because require fires before the table
+    // is built. LongDoubleMap gets an empty values array; the message
+    // check makes the bound refusal, not the alignment refusal, the one
+    // under test.
     val over = new Array[Long]((1 << 29) + 1)
-    intercept[IllegalArgumentException](graft.pipeline.LongHashSet(over))
-    intercept[IllegalArgumentException](
-      graft.pipeline.LongDoubleMap(over, new Array[Double](over.length), 0.0))
+    val bound = s"at most ${1 << 29} keys"
+    val e1 = intercept[IllegalArgumentException](graft.pipeline.LongHashSet(over))
+    assert(e1.getMessage.contains(bound))
+    val e2 = intercept[IllegalArgumentException](
+      graft.pipeline.LongDoubleMap(over, Array.emptyDoubleArray, 0.0))
+    assert(e2.getMessage.contains(bound))
   }
 
   test("LongHashSet: membership matches Set[Long], including 0 and absent keys") {

@@ -342,6 +342,38 @@ class DedupSpec extends AnyFunSuite {
     assert(dist.toMap == local)
   }
 
+  test("connected components: plan descriptions stay flat as star half-rounds accumulate") {
+    // Spark builds (and its status store keeps) a plan description for
+    // every SQL execution. Each half-round must start from a cut plan:
+    // nesting the previous half-round's cached plan grew the description
+    // ~4x per round (74 MB on this 12-node path; a 40-node path ran a
+    // 4 GiB heap out of memory).
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          descs.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val path = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val comps = Dedup.connectedComponents(path, maxLocalEdges = 0)
+        .as[(Long, Long)].collect().toMap
+      assert(comps == (0L to 11L).map(_ -> 0L).toMap)
+      // the bus delivers in order: once the marker query is seen, every
+      // execution above has been delivered too
+      spark.range(1).selectExpr("'cc_plan_marker' AS m").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!descs.toArray.exists(_.toString.contains("cc_plan_marker")) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      val sizes = descs.toArray.map(_.toString.length)
+      assert(sizes.length > 4)
+      assert(sizes.max < (64 << 10), s"plan description sizes: ${sizes.mkString(",")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("dedupNearLsh keeps one canonical doc per near-dup group plus all unpaired rows") {
     val boiler = "the quick brown fox jumps over the lazy dog again and again in the park today"
     val df = Seq(
