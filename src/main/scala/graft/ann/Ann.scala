@@ -75,7 +75,8 @@ object Ann {
     * the sample per pass: trainIvf measured 52–68 s there, almost all
     * of it that recompute). Caching preserves content, partitioning
     * and row order exactly, so the trained centers are bit-identical
-    * (pinned by tools/PqTrainProbe's centroid fingerprint). */
+    * (pinned by the golden centroid fingerprint in PqSpec; the r19
+    * A/B is in docs/probes/pq_build_r19.txt). */
   def trainIvf(df: DataFrame, vecCol: String, nCells: Int,
                seed: Long = 42L, maxIter: Int = 20): IvfModel = {
     val spark = df.sparkSession

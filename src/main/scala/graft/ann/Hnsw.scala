@@ -227,7 +227,7 @@ object Hnsw {
       * order is exactly [[dot]]'s, so every score is bit-identical to
       * the one-at-a-time loop — this changes throughput, never a bit
       * of the result (the r19 build-speed work is parity-pinned by
-      * graph fingerprint, tools/HnswParityProbe). Scores for
+      * graph fingerprint: HnswSpec's golden fingerprints). Scores for
       * `nodes(0 until cnt)` land in `out`. */
     @inline private def dotsInto(q: Array[Float], nodes: Array[Int], cnt: Int,
                                  out: Array[Double]): Unit = {

@@ -60,11 +60,16 @@ object VectorFunctions {
   /** Unit-normalize a vector column; zero vectors pass through unchanged
     * (reference `HNSWIndex.js:472-479` divides only when norm > 0).
     * Normalize once at ingest so cosine reduces to a dot product at query
-    * time — the same trick the reference applies at insert. */
-  def l2Normalize(v: Column): Column = {
-    val n = norm(v)
-    when(n > 0.0, transform(asD(v), x => x / n)).otherwise(asD(v))
-  }
+    * time — the same trick the reference applies at insert.
+    *
+    * The squared norm is folded ONCE per row and handed to the divide
+    * through `aggregate`'s finish lambda: a `norm(v)` written inside the
+    * `transform` lambda is re-evaluated for every element (d² work per
+    * row). Same products, same left-to-right sum, same sqrt and divide
+    * as that form, so the output is bit-identical to it. */
+  def l2Normalize(v: Column): Column =
+    aggregate(asD(v), lit(0.0), (acc, x) => acc + x * x,
+      sq => when(sq > 0.0, transform(asD(v), x => x / sqrt(sq))).otherwise(asD(v)))
 
   /** Literal query vector as an `ARRAY<DOUBLE>` column (broadcast by
     * Catalyst as a constant — no shuffle, no join). */

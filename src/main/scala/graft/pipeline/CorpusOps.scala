@@ -677,7 +677,8 @@ object CorpusOps {
     val kept = sur.crossJoin(broadcast(thr))
       .filter(col("surprisal") <= col("_thr"))
       .drop("_thr")
-    df.join(kept, df(idCol).cast("long") === kept("id")).drop("id")
+    // drop by reference: a caller key named `id` must survive the join
+    df.join(kept, df(idCol).cast("long") === kept("id")).drop(kept("id"))
   }
 
   // ─── End-to-end curation ───
@@ -706,7 +707,7 @@ object CorpusOps {
       .select($"id", $"repetition")
       .filter($"repetition" < maxRepetition)
     val base = canon.join(rep, canon(idCol).cast("long") === rep("id"))
-      .drop("id")
+      .drop(rep("id"))
     val pruned = surprisalQuantile.fold(base)(p =>
       pruneBySurprisalQuantile(base, textCol, idCol, p)
         .drop("n_words", "surprisal"))

@@ -126,6 +126,16 @@ final class RagPipeline(
     * cum_tokens)`). */
   def buildContext(query: String, topK: Int = 5, maxTokens: Int = 4000,
                    tenantId: Option[String] = None): (String, DataFrame) = {
+    val (prompt, _, sources) = packContext(query, topK, maxTokens, tenantId)
+    (prompt, sources)
+  }
+
+  /** [[buildContext]] plus the number of chunks packed into the prompt,
+    * counted on the rows the prompt was built from: `sources.count()`
+    * would run the search again, and a write landing in between could
+    * make the two disagree. */
+  private[graft] def packContext(query: String, topK: Int = 5, maxTokens: Int = 4000,
+                                 tenantId: Option[String] = None): (String, Int, DataFrame) = {
     init()
     val qv = embedder.embed(query).map(_.toDouble).toSeq
     val hits = engine.search(collection, qv, topK, tenantId = tenantId)
@@ -143,7 +153,7 @@ final class RagPipeline(
     val sources = packed.select(col("id"), col("score"),
       element_at(col("metadata"), "source").as("source"),
       col("tokens"), col("cum_tokens"))
-    (prompt, sources)
+    (prompt, kept.length, sources)
   }
 }
 

@@ -273,7 +273,7 @@ object Kernels {
     *
     * because cos(q̂, v̂) with q̂ = qscale·qc, v̂ = vscale·vc cancels BOTH
     * scales. The int8×int8 multiply-add lanes are the SDOT shape
-    * HotSpot vectorizes; measured (tools/Sq8Probe, 64-D): 0.8× the
+    * HotSpot vectorizes; measured (docs/probes/benchdiff_r17.txt, 64-D): 0.8× the
     * float kernel's time at 100k rows and 0.5× at 1M (bandwidth-bound
     * — the scan reads 4× fewer bytes), where the first-cut asymmetric
     * form (per-element byte→float widening inside the lanes) ran
@@ -373,8 +373,9 @@ object Kernels {
     *
     * The query codes are widened to int[] ONCE here (r17 kernel pass,
     * VERDICT r16 #3): with a byte[] query BOTH operands of every
-    * multiply sign-extend, and tools/Sq8Probe measured that second
-    * extension as the chain's bottleneck — the int-query variant runs
+    * multiply sign-extend, and the r17 SQ8 probe (ledger:
+    * docs/probes/benchdiff_r17.txt) measured that second extension as
+    * the chain's bottleneck — the int-query variant runs
     * 1.4-1.6× faster at every probed scale (1M×64: 28.4 vs 44.0 ms;
     * 1M×128: 50.3 vs 58.4; 100k×64: 2.53 vs 3.81 — at or below the
     * float kernel's time everywhere, restoring the 4×-fewer-bytes

@@ -450,8 +450,9 @@ object PackedIndex {
       * (isotropic 64-d, the unfavorable case), 8-byte ADC needs a
       * ~160-candidate pool for refined score-recall@10 ≥ 0.93 with
       * full probing; 4 left recall on the table (r6 grid —
-      * tools/PqProbe). The refine cost is one broadcast join over
-      * Q × k × refineFactor rows — cheap next to the ADC pass. */
+      * docs/probes/HISTORY.md, retired PqProbe). The refine cost is
+      * one broadcast join over Q × k × refineFactor rows — cheap next
+      * to the ADC pass. */
     def searchRefined(df: DataFrame, vecCol: String, idCol: String,
                       queries: Seq[(Long, Seq[Double])], k: Int, nProbe: Int,
                       refineFactor: Int = 16): DataFrame = {

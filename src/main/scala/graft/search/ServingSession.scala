@@ -53,8 +53,9 @@ object ServingSession {
 
   /** Minimum row-equivalents of scan work per parallel worker. Fan-out
     * is work-proportional, not core-count-proportional. Measured with
-    * `graft.tools.ServingProbe` (r9 box, dim 64): at 10k rows the scan
-    * is cache-resident and task-fork cost dominates — 2 workers beat
+    * the retired ServingProbe (r9 box, dim 64; the r15 100k sweep is in
+    * docs/probes/serving100k_r15.txt): at 10k rows the scan is
+    * cache-resident and task-fork cost dominates — 2 workers beat
     * 10 by ~25% (0.27 vs 0.37 ms p50); at 100k+ the scan is
     * DRAM-bound and memory-level parallelism wins — 24-32 workers sit
     * at the p50 minimum and fewer workers lose linearly. 4096 hits the

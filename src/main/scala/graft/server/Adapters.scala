@@ -174,8 +174,8 @@ final class EngineFacade(
 
     case "rag_query" =>
       val q = jfield(body, "query").getOrElse(throw new IllegalArgumentException("query required"))
-      val (prompt, sources) = rag.buildContext(q, topK = jint(body, "topK", 5))
-      s"""{"prompt":${jstr(prompt)},"chunks":${sources.count()}}"""
+      val (prompt, chunks, _) = rag.packContext(q, topK = jint(body, "topK", 5))
+      s"""{"prompt":${jstr(prompt)},"chunks":$chunks}"""
 
     case "tree_index" =>
       val docId = jfield(body, "docId").getOrElse(throw new IllegalArgumentException("docId required"))

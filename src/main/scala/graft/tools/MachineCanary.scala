@@ -13,8 +13,9 @@ import graft.search.Kernels
   * points: ~0.31 ms on the r6/r7 sandbox, ~0.1 ms implied for the
   * r5-class machine (r5/r6 throughput ratio on unchanged kernels).
   *
-  * Same block parameters as `KernelProbe`'s first row, so historical
-  * probe numbers line up with the canary. */
+  * Same block parameters as the first row of the retired KernelProbe
+  * (docs/probes/HISTORY.md), so historical probe numbers line up with
+  * the canary. */
 object MachineCanary {
 
   /** (p50 ms, best ms) of the canary kernel call. */

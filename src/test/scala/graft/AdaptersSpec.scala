@@ -170,4 +170,45 @@ class AdaptersSpec extends AnyFunSuite {
     assert(mcp.callTool("fusionpact_list_collections", "{}").contains("mcp_demo"))
     assertThrows[NoSuchElementException](mcp.callTool("fusionpact_nope", "{}"))
   }
+
+  test("rag_query reports the chunks packed into the prompt and runs no job beyond building it") {
+    val engine = new FusionEngine(spark, Files.createTempDirectory("graft_srv").toString)
+    val embedder = new MockEmbedderProvider(64)
+    val rag = new RagPipeline(engine, embedder, chunkSize = 120, chunkOverlap = 20)
+    val f = new EngineFacade(engine, embedder, new AgentMemory(engine, embedder), rag,
+      new TreeIndex(spark, Files.createTempDirectory("graft_srv_tree").toString))
+    val text = (1 to 12).map(i => s"Section $i covers safety orientation step $i for new staff.")
+      .mkString(" ")
+    f.call("rag_ingest", s"""{"text": "$text", "source": "handbook"}""")
+    val query = """{"query": "safety orientation", "topK": 4}"""
+    f.call("rag_query", query) // warm: first search, snapshot and plan caches
+
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b)))
+    }
+    def inGroup[A](group: String)(body: => A): A = {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = inGroup("rag_query")(f.call("rag_query", query))
+      val (prompt, _) = inGroup("build_context")(rag.buildContext("safety orientation", topK = 4))
+      // the bus delivers in order: once the marker job is seen, so are the above
+      inGroup("marker")(spark.range(1).collect())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.containsKey("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      val chunks = """"chunks":(\d+)""".r.findFirstMatchIn(out).map(_.group(1).toInt)
+      // chunk contents are single-line, so "\n\n" separates the pieces
+      assert(chunks.contains(prompt.split("\n\n").length))
+      assert(chunks.contains(4))
+      val (queryJobs, contextJobs) =
+        (jobs.getOrDefault("rag_query", 0).intValue, jobs.getOrDefault("build_context", 0).intValue)
+      assert(contextJobs > 0 && queryJobs <= contextJobs,
+        s"rag_query ran $queryJobs jobs; building its context alone runs $contextJobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -5,6 +5,7 @@ import java.security.MessageDigest
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
 import graft.pipeline.CorpusOps
 
 class CorpusOpsSpec extends AnyFunSuite {
@@ -827,5 +828,24 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(baseIds.contains(20L))
     assert(prunedIds.subsetOf(baseIds) && !prunedIds.contains(20L))
     assert(prunedIds.nonEmpty)
+  }
+
+  test("curate keeps a caller key named id, with and without the surprisal prune") {
+    val docs = ((0L until 12L).map(i =>
+      (i, s"the quick brown fox jumps over the lazy dog number $i end")) ++
+      Seq((20L, "zyxw vuts rqpo nmlk jihg fedc baqq plor mnbv cxza qwer tyui"),
+        (21L, "the quick brown fox jumps over the lazy dog number 0 end")))
+      .toDF("id", "text")
+    val byDocId = CorpusOps.curate(docs.withColumnRenamed("id", "doc_id"), "text", "doc_id")
+      .select("doc_id", "split").as[(Long, String)].collect().toSet
+    Seq(None, Some(0.9)).foreach { q =>
+      val curated = CorpusOps.curate(docs, "text", "id", surprisalQuantile = q)
+      assert(curated.columns.count(_ == "id") == 1)
+      // a downstream stage keyed on the same column
+      val got = Dedup.dedupExact(curated, "text", "id")
+        .select("id", "split").as[(Long, String)].collect().toSet
+      if (q.isEmpty) assert(got == byDocId)
+      else assert(got.nonEmpty && got.subsetOf(byDocId) && !got.exists(_._1 == 20L))
+    }
   }
 }

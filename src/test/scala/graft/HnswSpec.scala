@@ -377,4 +377,36 @@ class HnswSpec extends AnyFunSuite {
     val empty = Hnsw.fromDataFrame(df.filter($"vec_id" < 0), "embedding", "vec_id")
     assert(empty.get.searchOne(q, 5).isEmpty)
   }
+
+  /** SHA-256 of the [[Hnsw.Index.save]] stream. The stream is a complete,
+    * deterministic encoding of everything search-relevant (params, seed,
+    * levels, vectors, id lists, adjacency, entry point), so two builds
+    * with one fingerprint answer every query identically. */
+  private def fingerprint(idx: Hnsw.Index): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val out = new java.io.DataOutputStream(new java.security.DigestOutputStream(
+      java.io.OutputStream.nullOutputStream(), md))
+    idx.save(out)
+    out.flush()
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  // Golden graphs: a change to the build that moves a single link, level
+  // or id fails here, so a speed-up of the build must reproduce them
+  // exactly. buildParallel's result depends on (input order, seed,
+  // batchSize) only, never on thread count, so they hold on any machine.
+  test("golden fingerprints: seeded build, buildParallel and a duplicate-tiled build") {
+    val vs = mkVecs(6000, 32, seed = 11)
+    def rows = vs.iterator.map(v => (v._1, v._2.clone()))
+    val seq = Hnsw.build(rows.take(2000), dim = 32, seed = 42L)
+    // default warmup 1024 and batchSize 2048: three frozen-graph batches
+    val par = Hnsw.buildParallel(rows, dim = 32, seed = 42L)
+    val uniq = mkVecs(1500, 32, seed = 7)
+    val dup = Hnsw.buildParallel(
+      Iterator.tabulate(6000)(i => (i.toLong, uniq(i % 1500)._2.clone())), dim = 32, seed = 42L)
+    assert(dup.n == 1500 && dup.nVectors == 6000L)
+    assert(fingerprint(seq) == "5eb2336a974b1c67fe42eedf8deacdbc6ceb39c250aedbe9cddeb440122ed485")
+    assert(fingerprint(par) == "a17ef305c4b9a89b5a938beff644f5c9127fb6d4e377bd15bb020b10c2f3c864")
+    assert(fingerprint(dup) == "5f91a54331bfc0e5fc7022fc0adbf02458d7b7cd4d3d75396ce3b79321277b14")
+  }
 }

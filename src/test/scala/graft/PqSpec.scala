@@ -236,4 +236,54 @@ class PqSpec extends AnyFunSuite {
     assert(out.map(_._1).toSeq == Seq(1L))
     assert(out.head._3.length == 8)
   }
+
+  private def sha16(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .map(b => f"$b%02x").mkString.take(16)
+
+  // Golden residual IVF-PQ build: the IVF centroids and PQ codebooks bit
+  // for bit, and an order-independent hash of every (id, cell, code) row,
+  // so a speed-up of the build must reproduce them exactly. The corpus is
+  // pinned to 4 input partitions, because MLlib k-means samples and sums
+  // per partition; with the seeds fixed the build then does not depend on
+  // the machine's core count.
+  test("golden fingerprints: IVF centroids, PQ codebooks and code table of a residual build") {
+    import spark.implicits._
+    val d = 32; val nCenters = 200
+    val corpus = spark.range(0L, 20000L, 1L, numPartitions = 4).as[Long].mapPartitions { it =>
+      val centers = Array.tabulate(nCenters) { cl =>
+        val rc = new scala.util.Random(cl * 1009 + 7)
+        Array.fill(d)(rc.nextGaussian())
+      }
+      it.map { i =>
+        val center = centers((i % nCenters).toInt)
+        val rn = new scala.util.Random(i)
+        (i, Pq.l2normalize(Array.tabulate(d)(j => (center(j) + 0.5 * rn.nextGaussian()).toFloat)))
+      }
+    }.toDF("vec_id", "embedding")
+    val ivf = Ann.trainIvf(corpus, "embedding", nCells = 16, maxIter = 5)
+    val cells = Ann.assignCells(corpus, "embedding", "vec_id", ivf)
+    val pq = Pq.trainResidual(cells, ivf, m = 8)
+    val centroids = {
+      val bb = java.nio.ByteBuffer.allocate(ivf.centroids.length * d * 8)
+      ivf.centroids.foreach(_.foreach(bb.putDouble))
+      sha16(bb.array())
+    }
+    val codebooks = {
+      val bb = java.nio.ByteBuffer.allocate(pq.codebooks.length * 4)
+      pq.codebooks.foreach(bb.putFloat)
+      sha16(bb.array())
+    }
+    // sum and xor of a per-row 64-bit mix of (id, cell, code bytes)
+    val (sum, xor, n) = Pq.encodeCells(cells, pq, residualIvf = Some(ivf)).rdd
+      .map { case (id, cell, code) =>
+        var h = id * 0x9E3779B97F4A7C15L + cell * 0xC2B2AE3D27D4EB4FL
+        code.foreach(c => h = (h ^ c) * 0x100000001B3L)
+        (h, h, 1L)
+      }
+      .fold((0L, 0L, 0L)) { case ((a, b, c), (x, y, z)) => (a + x, b ^ y, c + z) }
+    assert(centroids == "81b19475bf9fd23d")
+    assert(codebooks == "52f4258bc942ea37")
+    assert(f"$sum%016x:$xor%016x:$n" == "1d4293a3760f22d0:a7cb755c818aa87a:20000")
+  }
 }

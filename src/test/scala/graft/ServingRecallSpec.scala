@@ -158,10 +158,10 @@ class ServingRecallSpec extends AnyFunSuite {
     // VERDICT r15 #5: the composed FAISS `IVF,SQ8` point gets the same
     // spec-pinned floor as its parents. Recall composes two losses —
     // cell-miss (IVF alone pins ≥0.93 at this config) and int8 reorder
-    // (SQ8 alone pins ≥0.95) — tools/IvfSq8Probe measured the product
-    // at 0.976 on this corpus, FLAT across nProbe 4..32 (queries drawn
-    // from the corpus land in their own cluster's cell, so the int8
-    // step is the entire loss here). Deterministic seeds → no flake.
+    // (SQ8 alone pins ≥0.95) — the r16 IVF×SQ8 probe (its record is in
+    // COVERAGE.md) measured the product at 0.976 on this corpus, FLAT
+    // across nProbe 4..32 (queries drawn from the corpus land in their
+    // own cluster's cell, so the int8 step is the entire loss here). Deterministic seeds → no flake.
     // Protocol = the SQ8 test's: exact driver rescore of every
     // returned id vs the exact kth.
     val model = graft.ann.Ann.trainIvf(corpus, "embedding", nCells = 32, maxIter = 5)
@@ -185,8 +185,8 @@ class ServingRecallSpec extends AnyFunSuite {
   test("SQ8 holds score-recall@10 >= 0.95 at 100k x 128-D isotropic (the hardest regime)") {
     // r15 extension of the 64-D clustered contract: isotropic 128-D is
     // the harshest near-tie regime and the symmetric int8 noise grows
-    // ~sqrt(dim); tools/Sq8RecallProbe measured 0.984 here (and >= 0.976
-    // in every probed regime) — deterministic seeds, so the bar cannot
+    // ~sqrt(dim); the r15 SQ8 recall probe (docs/probes/benchdiff_r15.txt)
+    // measured 0.984 here (and >= 0.976 in every probed regime) — deterministic seeds, so the bar cannot
     // flake. Driver-local session (fromLocalRowsSq8 — bit-parity with
     // the distributed pack is pinned in PackedIndexSpec).
     val d = 128

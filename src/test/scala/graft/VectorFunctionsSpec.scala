@@ -40,6 +40,34 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(row.getSeq[Double](1) == Seq(0.0, 0.0))
   }
 
+  test("l2Normalize is bit-identical to the per-element norm(v) form on float and double rows") {
+    // the form it replaced: norm(v) inside the transform lambda
+    def perElementNorm(v: org.apache.spark.sql.Column) = {
+      val n = norm(v)
+      when(n > 0.0, transform(v.cast("array<double>"), x => x / n))
+        .otherwise(v.cast("array<double>"))
+    }
+    val rnd = new scala.util.Random(17)
+    val dims = Seq(1, 1, 2, 3, 7, 64, 128, 384)
+    val doubles = dims.map(d => Array.fill(d)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(7) - 3))) ++
+      Seq(Array(0.0), Array.fill(16)(0.0), Array(-0.0, 0.0), Array(1e-300, 1e-300), Array(3.0, 4.0))
+    val floats = doubles.map(_.map(_.toFloat)) :+ Array(Float.MinPositiveValue, 1e30f)
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val rows = df.select(l2Normalize($"v"), perElementNorm($"v")).collect()
+      rows.foreach { r =>
+        val (got, want) = (r.getSeq[Double](0), r.getSeq[Double](1))
+        assert(got.map(java.lang.Double.doubleToRawLongBits) ==
+          want.map(java.lang.Double.doubleToRawLongBits), s"$got vs $want")
+      }
+    }
+    check(doubles.toDF("v"))
+    check(floats.toDF("v"))
+    // null rows and null elements pass through as the old form did
+    val nulls = Seq(Some(Seq[java.lang.Double](1.0, null)), None).toDF("v")
+    val got = nulls.select(l2Normalize($"v"), perElementNorm($"v")).collect()
+    assert(got.forall(r => r.get(0) == r.get(1)))
+  }
+
   test("QueryScore native expression: bit-parity with the HOF forms on all four modes") {
     import graft.functions.QueryScore
     import graft.search.VectorSearch
