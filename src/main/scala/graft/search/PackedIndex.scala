@@ -1,7 +1,9 @@
 package graft.search
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ann.Ann.IvfModel
@@ -29,13 +31,19 @@ object PackedIndex {
     * every fleet — cosine/euclidean skip a full per-search pass). */
   final case class VecBlock(ids: Array[Long], xs: Array[Float], norm2: Array[Double])
 
+  /** What every per-cell tile shares — its cell and row ids, all the
+    * cell routing and grouping steps read. */
+  sealed trait CellTile { def cell: Int; def ids: Array[Long] }
+
   /** A packed tile of a single IVF cell. */
   final case class CellBlock(cell: Int, ids: Array[Long], xs: Array[Float], norm2: Array[Double])
+    extends CellTile
 
   /** A packed tile of PQ codes for a single IVF cell: `codes` is
     * row-major n × m bytes — `m`/4·dim the footprint of a [[CellBlock]]
     * (8 B/vector at 64-D, m=8 — 32× smaller than float32). */
   final case class PqCellBlock(cell: Int, ids: Array[Long], codes: Array[Byte])
+    extends CellTile
 
   /** A packed tile of SQ8 codes: row-major n × dim int8 + per-row
     * scale + per-row squared norm of the RECONSTRUCTED vector
@@ -51,6 +59,7 @@ object PackedIndex {
     * ~4× IVF's rows while a probe still touches only its cells. */
   final case class Sq8CellBlock(cell: Int, ids: Array[Long], codes: Array[Byte],
                                 scales: Array[Double], norm2: Array[Double])
+    extends CellTile
 
   /** Pack `(id, vector)` rows of a partition into [[VecBlock]]s of at
     * most [[Kernels.TileRows]] rows. Also the driver-local pack path
@@ -161,23 +170,13 @@ object PackedIndex {
       * [[VectorSearch.knnBatchFast]]'s precision note (ADVICE r3). */
     def search(queries: Seq[(Long, Array[Double])], k: Int,
                m: VectorSearch.Metric = VectorSearch.Cosine): DataFrame = {
-      val qids = queries.map(_._1).toArray
-      val qVecs = queries.map(_._2.map(_.toFloat)).toArray
       val code = metricCode(m)
-      val bc = blocks.sparkContext.broadcast((qids, qVecs))
-      val pairs = blocks.mapPartitions { bit =>
-        val (ids, vecs) = bc.value
-        val nq = ids.length
-        if (nq == 0 || bit.isEmpty) Iterator.empty
-        else {
-          val qp = Kernels.packQueries(vecs)
-          val heaps = Array.fill(nq)(new Kernels.TopKHeap(k))
-          val out = new Array[Float](nq)
-          bit.foreach(b => Kernels.scoreTile(code, qp, b.xs, b.ids, b.ids.length, heaps, out, b.norm2))
-          Kernels.drain(heaps, ids)
-        }
+      fleetScan(spark, blocks, queries.map(_._1).toArray,
+          queries.map(_._2.map(_.toFloat)).toArray, k) { (bit, vecs, heaps) =>
+        val qp = Kernels.packQueries(vecs)
+        val out = new Array[Float](vecs.length)
+        bit.foreach(b => Kernels.scoreTile(code, qp, b.xs, b.ids, b.ids.length, heaps, out, b.norm2))
       }
-      rank(spark, pairs, k, bc)
     }
 
     def unpersist(): Unit = { blocks.unpersist(); () }
@@ -199,23 +198,13 @@ object PackedIndex {
       * symmetric: queries quantize once per search, scores are the
       * integer cosine of the code vectors ([[Kernels.scoreSq8Tile]]). */
     def search(queries: Seq[(Long, Array[Double])], k: Int): DataFrame = {
-      val qids = queries.map(_._1).toArray
-      val qVecs = queries.map(_._2.map(_.toFloat)).toArray
-      val bc = blocks.sparkContext.broadcast((qids, qVecs))
-      val pairs = blocks.mapPartitions { bit =>
-        val (ids, vecs) = bc.value
-        val nq = ids.length
-        if (nq == 0 || bit.isEmpty) Iterator.empty
-        else {
-          val qp = Kernels.packSq8Queries(vecs)
-          val heaps = Array.fill(nq)(new Kernels.TopKHeap(k))
-          val out = new Array[Int](nq)
-          bit.foreach(b => Kernels.scoreSq8Tile(qp, b.codes, b.scales, b.ids,
-            b.ids.length, heaps, out, b.norm2))
-          Kernels.drain(heaps, ids)
-        }
+      fleetScan(spark, blocks, queries.map(_._1).toArray,
+          queries.map(_._2.map(_.toFloat)).toArray, k) { (bit, vecs, heaps) =>
+        val qp = Kernels.packSq8Queries(vecs)
+        val out = new Array[Int](vecs.length)
+        bit.foreach(b => Kernels.scoreSq8Tile(qp, b.codes, b.scales, b.ids,
+          b.ids.length, heaps, out, b.norm2))
       }
-      rank(spark, pairs, k, bc)
     }
 
     def unpersist(): Unit = { blocks.unpersist(); () }
@@ -232,47 +221,14 @@ object PackedIndex {
     /** Cosine top-k per query over the probed cells only. */
     def search(queries: Seq[(Long, Seq[Double])], k: Int, nProbe: Int): DataFrame = {
       val qArr = queries.toArray
-      val qids = qArr.map(_._1)
-      val qVecs = qArr.map(_._2.toArray.map(_.toFloat))
-      val c2q: Array[Array[Int]] = {
-        val m = Array.fill(model.nCells)(scala.collection.mutable.ArrayBuffer.empty[Int])
-        qArr.zipWithIndex.foreach { case ((_, qv), qi) =>
-          model.nearestCells(qv, nProbe).foreach(c => m(c) += qi)
-        }
-        m.map(_.toArray)
-      }
-      val bc = blocks.sparkContext.broadcast((qids, qVecs, c2q))
-      val pairs = blocks.mapPartitions { bit =>
-        val (ids, vecs, cq) = bc.value
-        val nqAll = ids.length
-        if (nqAll == 0 || bit.isEmpty) Iterator.empty
-        else {
-          val nCells = cq.length
-          val heaps = Array.fill(nqAll)(new Kernels.TopKHeap(k))
-          val packs = new Array[Kernels.QueryPack](nCells)
-          val cellHeaps = new Array[Array[Kernels.TopKHeap]](nCells)
-          var maxNq = 0
-          var c = 0
-          while (c < nCells) {
-            if (cq(c).length > maxNq) maxNq = cq(c).length
-            c += 1
-          }
-          val out = new Array[Float](maxNq)
-          bit.foreach { cb =>
-            val probing = cq(cb.cell)
-            if (probing.nonEmpty) {
-              if (packs(cb.cell) == null) {
-                packs(cb.cell) = Kernels.packQueries(probing.map(vecs(_)))
-                cellHeaps(cb.cell) = probing.map(heaps(_))
-              }
-              Kernels.scoreTile(Kernels.MetricCosine, packs(cb.cell), cb.xs, cb.ids,
-                cb.ids.length, cellHeaps(cb.cell), out, cb.norm2)
-            }
-          }
-          Kernels.drain(heaps, ids)
+      val payload = (qArr.map(_._2.toArray.map(_.toFloat)), probingQueries(model, qArr, nProbe))
+      fleetScan(spark, blocks, qArr.map(_._1), payload, k) { case (bit, (vecs, cq), heaps) =>
+        val out = new Array[Float](maxProbing(cq))
+        scanCells(bit, cq, heaps)(probing => Kernels.packQueries(probing.map(vecs(_)))) {
+          (qp, cb, hs) => Kernels.scoreTile(Kernels.MetricCosine, qp, cb.xs, cb.ids,
+            cb.ids.length, hs, out, cb.norm2)
         }
       }
-      rank(spark, pairs, k, bc)
     }
 
     def unpersist(): Unit = { blocks.unpersist(); () }
@@ -299,47 +255,14 @@ object PackedIndex {
       * per probed cell's pack, symmetric integer scoring). */
     def search(queries: Seq[(Long, Seq[Double])], k: Int, nProbe: Int): DataFrame = {
       val qArr = queries.toArray
-      val qids = qArr.map(_._1)
-      val qVecs = qArr.map(_._2.toArray.map(_.toFloat))
-      val c2q: Array[Array[Int]] = {
-        val m = Array.fill(model.nCells)(scala.collection.mutable.ArrayBuffer.empty[Int])
-        qArr.zipWithIndex.foreach { case ((_, qv), qi) =>
-          model.nearestCells(qv, nProbe).foreach(c => m(c) += qi)
-        }
-        m.map(_.toArray)
-      }
-      val bc = blocks.sparkContext.broadcast((qids, qVecs, c2q))
-      val pairs = blocks.mapPartitions { bit =>
-        val (ids, vecs, cq) = bc.value
-        val nqAll = ids.length
-        if (nqAll == 0 || bit.isEmpty) Iterator.empty
-        else {
-          val nCells = cq.length
-          val heaps = Array.fill(nqAll)(new Kernels.TopKHeap(k))
-          val packs = new Array[Kernels.Sq8QueryPack](nCells)
-          val cellHeaps = new Array[Array[Kernels.TopKHeap]](nCells)
-          var maxNq = 0
-          var c = 0
-          while (c < nCells) {
-            if (cq(c).length > maxNq) maxNq = cq(c).length
-            c += 1
-          }
-          val out = new Array[Int](maxNq)
-          bit.foreach { cb =>
-            val probing = cq(cb.cell)
-            if (probing.nonEmpty) {
-              if (packs(cb.cell) == null) {
-                packs(cb.cell) = Kernels.packSq8Queries(probing.map(vecs(_)))
-                cellHeaps(cb.cell) = probing.map(heaps(_))
-              }
-              Kernels.scoreSq8Tile(packs(cb.cell), cb.codes, cb.scales, cb.ids,
-                cb.ids.length, cellHeaps(cb.cell), out, cb.norm2)
-            }
-          }
-          Kernels.drain(heaps, ids)
+      val payload = (qArr.map(_._2.toArray.map(_.toFloat)), probingQueries(model, qArr, nProbe))
+      fleetScan(spark, blocks, qArr.map(_._1), payload, k) { case (bit, (vecs, cq), heaps) =>
+        val out = new Array[Int](maxProbing(cq))
+        scanCells(bit, cq, heaps)(probing => Kernels.packSq8Queries(probing.map(vecs(_)))) {
+          (qp, cb, hs) => Kernels.scoreSq8Tile(qp, cb.codes, cb.scales, cb.ids,
+            cb.ids.length, hs, out, cb.norm2)
         }
       }
-      rank(spark, pairs, k, bc)
     }
 
     /** Quantized candidates re-ranked at FULL precision against the
@@ -391,52 +314,35 @@ object PackedIndex {
       val qVecs = qArr.map(q => graft.ann.Pq.l2normalize(q._2.toArray.map(_.toFloat)))
       // per cell: the probing query indexes, and (residual only) the
       // matching dot(q, centroid) offsets — zero when codes are raw
-      val (c2q, c2off): (Array[Array[Int]], Array[Array[Double]]) = {
-        val m = Array.fill(ivf.nCells)(scala.collection.mutable.ArrayBuffer.empty[Int])
-        val o = Array.fill(ivf.nCells)(scala.collection.mutable.ArrayBuffer.empty[Double])
-        qArr.zipWithIndex.foreach { case ((_, qv), qi) =>
-          ivf.nearestCells(qv, nProbe).foreach { c =>
-            m(c) += qi
-            o(c) += (if (residual) qDotCentroid(qVecs(qi), ivf.centroids(c)) else 0.0)
-          }
-        }
-        (m.map(_.toArray), o.map(_.toArray))
-      }
+      val c2q = probingQueries(ivf, qArr, nProbe)
+      val c2off = c2q.indices.map(c => c2q(c).map(qi =>
+        if (residual) qDotCentroid(qVecs(qi), ivf.centroids(c)) else 0.0)).toArray
       val model = pq
-      val bc = blocks.sparkContext.broadcast((qids, qVecs, c2q, c2off))
-      val pairs = blocks.mapPartitions { bit =>
-        val (ids, vecs, cq, coff) = bc.value
-        val nqAll = ids.length
-        if (nqAll == 0 || bit.isEmpty) Iterator.empty
-        else {
-          val heaps = Array.fill(nqAll)(new Kernels.TopKHeap(k))
-          // LUTs built lazily once per query, reused across this
-          // partition's blocks (m × 256 floats = 8 KB each)
-          val luts = new Array[Array[Float]](nqAll)
-          val m = model.m
-          bit.foreach { cb =>
-            val probing = cq(cb.cell)
-            val offsets = coff(cb.cell)
-            var pi = 0
-            while (pi < probing.length) {
-              val qi = probing(pi)
-              if (luts(qi) == null) luts(qi) = model.lookupTable(vecs(qi))
-              val lut = luts(qi)
-              val off = offsets(pi)
-              val heap = heaps(qi)
-              val nRows = cb.ids.length
-              var r = 0
-              while (r < nRows) {
-                heap.offer(off + model.adcScore(lut, cb.codes, r * m), cb.ids(r))
-                r += 1
-              }
-              pi += 1
+      fleetScan(spark, blocks, qids, (qVecs, c2q, c2off), k) { case (bit, (vecs, cq, coff), heaps) =>
+        // LUTs built lazily once per query, reused across this
+        // partition's blocks (m × 256 floats = 8 KB each)
+        val luts = new Array[Array[Float]](vecs.length)
+        val m = model.m
+        bit.foreach { cb =>
+          val probing = cq(cb.cell)
+          val offsets = coff(cb.cell)
+          var pi = 0
+          while (pi < probing.length) {
+            val qi = probing(pi)
+            if (luts(qi) == null) luts(qi) = model.lookupTable(vecs(qi))
+            val lut = luts(qi)
+            val off = offsets(pi)
+            val heap = heaps(qi)
+            val nRows = cb.ids.length
+            var r = 0
+            while (r < nRows) {
+              heap.offer(off + model.adcScore(lut, cb.codes, r * m), cb.ids(r))
+              r += 1
             }
+            pi += 1
           }
-          Kernels.drain(heaps, ids)
         }
       }
-      rank(spark, pairs, k, bc)
     }
 
     /** ADC candidates re-ranked at FULL precision against the source
@@ -464,124 +370,99 @@ object PackedIndex {
     def unpersist(): Unit = { blocks.unpersist(); () }
   }
 
-  /** Build the exact-scan index: one narrow pack pass, cached. */
-  def buildExact(df: DataFrame, vectorCol: String, idCol: String): Exact = {
-    val spark = df.sparkSession
-    import spark.implicits._
+  /** `(id, vector)` rows of `df` with a non-null vector, and the first
+    * row's dimension (0 when empty). */
+  private def idVectors(df: DataFrame, vectorCol: String,
+                        idCol: String): (Dataset[(Long, Array[Float])], Int) = {
+    import df.sparkSession.implicits._
     val src = df.select(col(idCol).cast("long").as("id"),
         col(vectorCol).cast("array<float>").as("v"))
       .filter(col("v").isNotNull)
       .as[(Long, Array[Float])]
-    val dim = src.take(1).headOption.map(_._2.length).getOrElse(0)
+    (src, src.take(1).headOption.map(_._2.length).getOrElse(0))
+  }
+
+  /** Build the exact-scan index: one narrow pack pass, cached. */
+  def buildExact(df: DataFrame, vectorCol: String, idCol: String): Exact = {
+    val (src, dim) = idVectors(df, vectorCol, idCol)
     val blocks = src.rdd.mapPartitions(packRows(_, dim)).cache()
     val n = blocks.map(_.ids.length.toLong).fold(0L)(_ + _) // materialize
-    new Exact(spark, blocks, dim, n)
+    new Exact(df.sparkSession, blocks, dim, n)
   }
 
   /** Build the SQ8 index: one narrow pack-and-quantize pass, cached —
     * the 4×-compressed sibling of [[buildExact]] (quantize on ingest,
     * dim + 24 B/row resident instead of 4·dim + 16). */
   def buildSq8(df: DataFrame, vectorCol: String, idCol: String): Sq8 = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val src = df.select(col(idCol).cast("long").as("id"),
-        col(vectorCol).cast("array<float>").as("v"))
-      .filter(col("v").isNotNull)
-      .as[(Long, Array[Float])]
-    val dim = src.take(1).headOption.map(_._2.length).getOrElse(0)
+    val (src, dim) = idVectors(df, vectorCol, idCol)
     val blocks = src.rdd.mapPartitions(packSq8Rows(_, dim)).cache()
     val n = blocks.map(_.ids.length.toLong).fold(0L)(_ + _) // materialize
-    new Sq8(spark, blocks, dim, n)
+    new Sq8(df.sparkSession, blocks, dim, n)
+  }
+
+  /** An assigned cell table `(id, v, cell)` ([[graft.ann.Ann.assignCells]])
+    * repartitioned by cell, as `(cell, (id, v))` rows of the first
+    * row's dimension (malformed rows skipped), and that dimension. */
+  private def cellVectors(cells: DataFrame): (RDD[(Int, (Long, Array[Float]))], Int) = {
+    import cells.sparkSession.implicits._
+    val src = cells.select(col("id").cast("long"),
+        col("v").cast("array<float>"), col("cell").cast("int"))
+      .filter(col("v").isNotNull)
+      .repartition(col("cell"))
+      .as[(Long, Array[Float], Int)]
+    val dim = src.take(1).headOption.map(_._2.length).getOrElse(0)
+    (src.rdd.mapPartitions(_.collect {
+      case (id, v, cell) if v != null && v.length == dim => (cell, (id, v))
+    }), dim)
+  }
+
+  /** Tile one cell-partitioned partition: a partition holds whole cells
+    * (hash partitioning by cell), possibly several, so rows buffer per
+    * cell in arrival order and `pack(cell, rows)` closes a tile every
+    * `tileRows` rows of a cell and at the partition's end. */
+  private def tilesByCell[R, B](it: Iterator[(Int, R)], tileRows: Int)(
+      pack: (Int, scala.collection.Seq[R]) => B): Iterator[B] = {
+    val bufs = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuffer[R]]
+    val done = scala.collection.mutable.ArrayBuffer.empty[B]
+    it.foreach { case (cell, r) =>
+      val buf = bufs.getOrElseUpdate(cell.toLong, scala.collection.mutable.ArrayBuffer.empty[R])
+      buf += r
+      if (buf.length == tileRows) {
+        done += pack(cell, buf)
+        bufs.remove(cell.toLong)
+      }
+    }
+    bufs.foreach { case (cell, buf) => if (buf.nonEmpty) done += pack(cell.toInt, buf) }
+    done.iterator
   }
 
   /** Build the IVF index from an assigned cell table `(id, v, cell)`
     * ([[graft.ann.Ann.assignCells]]): repartition by cell, pack each
     * cell's rows into dedicated blocks. */
   def buildIvf(cells: DataFrame, model: IvfModel): Ivf = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val src = cells.select(col("id").cast("long"),
-        col("v").cast("array<float>"), col("cell").cast("int"))
-      .filter(col("v").isNotNull)
-      .repartition(col("cell"))
-      .as[(Long, Array[Float], Int)]
-    val dim = src.take(1).headOption.map(_._2.length).getOrElse(0)
-    val blocks = src.rdd.mapPartitions { it =>
-      // per-cell accumulation: a partition holds whole cells (hash
-      // partitioning by cell), possibly several
-      val bufs = scala.collection.mutable.LongMap.empty[(scala.collection.mutable.ArrayBuffer[Long], scala.collection.mutable.ArrayBuilder.ofFloat, scala.collection.mutable.ArrayBuilder.ofDouble)]
-      val done = scala.collection.mutable.ArrayBuffer.empty[CellBlock]
-      it.foreach { case (id, v, cell) =>
-        if (v != null && v.length == dim) { // skip malformed rows
-          val (ids, xs, n2) = bufs.getOrElseUpdate(cell.toLong,
-            (new scala.collection.mutable.ArrayBuffer[Long],
-              new scala.collection.mutable.ArrayBuilder.ofFloat,
-              new scala.collection.mutable.ArrayBuilder.ofDouble))
-          ids += id
-          xs ++= v
-          n2 += rowNorm2(v)
-          if (ids.length == Kernels.TileRows) {
-            done += CellBlock(cell, ids.toArray, xs.result(), n2.result())
-            bufs.remove(cell.toLong)
-          }
-        }
-      }
-      bufs.foreach { case (cell, (ids, xs, n2)) =>
-        if (ids.nonEmpty) done += CellBlock(cell.toInt, ids.toArray, xs.result(), n2.result())
-      }
-      done.iterator
-    }.cache()
+    val (rows, dim) = cellVectors(cells)
+    val blocks = rows.mapPartitions(tilesByCell(_, Kernels.TileRows) { (cell, tile) =>
+      val b = packRows(tile.iterator, dim).next()
+      CellBlock(cell, b.ids, b.xs, b.norm2)
+    }).cache()
     val n = blocks.map(_.ids.length.toLong).fold(0L)(_ + _) // materialize + row count
-    new Ivf(spark, model, blocks, dim, n)
+    new Ivf(cells.sparkSession, model, blocks, dim, n)
   }
 
   /** Build the IVF×SQ8 index from an assigned cell table `(id, v,
     * cell)` ([[graft.ann.Ann.assignCells]]): repartition by cell, pack
     * each cell's rows into SQ8 code blocks with the EXACT quantization
-    * rule of [[buildSq8]] (shared [[quantizeSq8Row]] — bit-parity
-    * pinned in PackedIndexSpec). One narrow pack pass after the cell
-    * shuffle; cached footprint `n × (dim + 24)` bytes. */
+    * rule of [[buildSq8]] (shared [[packSq8Rows]] — bit-parity pinned
+    * in PackedIndexSpec). One narrow pack pass after the cell shuffle;
+    * cached footprint `n × (dim + 24)` bytes. */
   def buildIvfSq8(cells: DataFrame, model: IvfModel): IvfSq8 = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val src = cells.select(col("id").cast("long"),
-        col("v").cast("array<float>"), col("cell").cast("int"))
-      .filter(col("v").isNotNull)
-      .repartition(col("cell"))
-      .as[(Long, Array[Float], Int)]
-    val dim = src.take(1).headOption.map(_._2.length).getOrElse(0)
-    val blocks = src.rdd.mapPartitions { it =>
-      // per-cell accumulation, as in buildIvf, but rows quantize to
-      // int8 codes at pack time (quantize-on-ingest)
-      val bufs = scala.collection.mutable.LongMap.empty[(scala.collection.mutable.ArrayBuffer[Long], scala.collection.mutable.ArrayBuilder.ofByte, scala.collection.mutable.ArrayBuilder.ofDouble, scala.collection.mutable.ArrayBuilder.ofDouble)]
-      val done = scala.collection.mutable.ArrayBuffer.empty[Sq8CellBlock]
-      val rowCodes = new Array[Byte](dim)
-      it.foreach { case (id, v, cell) =>
-        if (v != null && v.length == dim) { // skip malformed rows
-          val (ids, cs, sc, n2) = bufs.getOrElseUpdate(cell.toLong,
-            (new scala.collection.mutable.ArrayBuffer[Long],
-              new scala.collection.mutable.ArrayBuilder.ofByte,
-              new scala.collection.mutable.ArrayBuilder.ofDouble,
-              new scala.collection.mutable.ArrayBuilder.ofDouble))
-          val (scale, norm2) = quantizeSq8Row(v, dim, rowCodes, 0)
-          ids += id
-          cs ++= rowCodes
-          sc += scale
-          n2 += norm2
-          if (ids.length == Kernels.TileRows) {
-            done += Sq8CellBlock(cell, ids.toArray, cs.result(), sc.result(), n2.result())
-            bufs.remove(cell.toLong)
-          }
-        }
-      }
-      bufs.foreach { case (cell, (ids, cs, sc, n2)) =>
-        if (ids.nonEmpty)
-          done += Sq8CellBlock(cell.toInt, ids.toArray, cs.result(), sc.result(), n2.result())
-      }
-      done.iterator
-    }.cache()
+    val (rows, dim) = cellVectors(cells)
+    val blocks = rows.mapPartitions(tilesByCell(_, Kernels.TileRows) { (cell, tile) =>
+      val b = packSq8Rows(tile.iterator, dim).next()
+      Sq8CellBlock(cell, b.ids, b.codes, b.scales, b.norm2)
+    }).cache()
     val n = blocks.map(_.ids.length.toLong).fold(0L)(_ + _) // materialize
-    new IvfSq8(spark, model, blocks, dim, n)
+    new IvfSq8(cells.sparkSession, model, blocks, dim, n)
   }
 
   /** Build the IVF-PQ index from an encoded `(id, cell, code)` dataset
@@ -598,25 +479,16 @@ object PackedIndex {
       .repartition(col("cell"))
       .as[(Long, Int, Array[Byte])]
     val blocks = src.rdd.mapPartitions { it =>
-      val bufs = scala.collection.mutable.LongMap.empty[(scala.collection.mutable.ArrayBuffer[Long], scala.collection.mutable.ArrayBuilder.ofByte)]
-      val done = scala.collection.mutable.ArrayBuffer.empty[PqCellBlock]
-      it.foreach { case (id, cell, code) =>
-        if (code != null && code.length == m) {
-          val (ids, cs) = bufs.getOrElseUpdate(cell.toLong,
-            (new scala.collection.mutable.ArrayBuffer[Long],
-              new scala.collection.mutable.ArrayBuilder.ofByte))
-          ids += id
-          cs ++= code
-          if (ids.length == Kernels.TileRows * 8) { // byte blocks are tiny; 8× tile rows
-            done += PqCellBlock(cell, ids.toArray, cs.result())
-            bufs.remove(cell.toLong)
-          }
-        }
+      val rows = it.collect {
+        case (id, cell, code) if code != null && code.length == m => (cell, (id, code))
       }
-      bufs.foreach { case (cell, (ids, cs)) =>
-        if (ids.nonEmpty) done += PqCellBlock(cell.toInt, ids.toArray, cs.result())
+      // byte blocks are tiny; 8× tile rows
+      tilesByCell(rows, Kernels.TileRows * 8) { (cell, tile) =>
+        val cs = new Array[Byte](tile.length * m)
+        var i = 0
+        tile.foreach { case (_, code) => System.arraycopy(code, 0, cs, i * m, m); i += 1 }
+        PqCellBlock(cell, tile.map(_._1).toArray, cs)
       }
-      done.iterator
     }.cache()
     val n = blocks.map(_.ids.length.toLong).fold(0L)(_ + _) // materialize
     // residual-ness rides the model itself — build sites cannot pair
@@ -624,7 +496,65 @@ object PackedIndex {
     new IvfPq(spark, ivfModel, pqModel, blocks, n, pqModel.residual)
   }
 
-  private def metricCode(m: VectorSearch.Metric): Int = m match {
+  /** The distributed fleet frame every packed index shares: broadcast
+    * the query ids with the per-search payload `x`, let `scan(blocks,
+    * x, heaps)` score one partition's blocks into a top-k heap per
+    * query, drain the heaps, and merge on the driver ([[rank]]). Only
+    * the scan differs between index kinds. */
+  private def fleetScan[B, X](spark: SparkSession, blocks: RDD[B], qids: Array[Long],
+                              x: X, k: Int)(
+      scan: (Iterator[B], X, Array[Kernels.TopKHeap]) => Unit): DataFrame = {
+    val bc = blocks.sparkContext.broadcast((qids, x))
+    val pairs = blocks.mapPartitions { bit =>
+      val (ids, px) = bc.value
+      if (ids.isEmpty || bit.isEmpty) Iterator.empty
+      else {
+        val heaps = Array.fill(ids.length)(new Kernels.TopKHeap(k))
+        scan(bit, px, heaps)
+        Kernels.drain(heaps, ids)
+      }
+    }
+    rank(spark, pairs, k, bc)
+  }
+
+  /** Per-cell fleet scan of one partition's tiles: a cell's probing
+    * queries (`cq(cell)`) are packed on first sight and, with their
+    * heaps, reused for every tile of that cell; `score(pack, tile,
+    * cellHeaps)` is the kernel call. Cells no query probes are skipped. */
+  private def scanCells[B <: CellTile, P <: AnyRef: ClassTag](
+      bit: Iterator[B], cq: Array[Array[Int]], heaps: Array[Kernels.TopKHeap])(
+      pack: Array[Int] => P)(score: (P, B, Array[Kernels.TopKHeap]) => Unit): Unit = {
+    val packs = new Array[P](cq.length)
+    val cellHeaps = new Array[Array[Kernels.TopKHeap]](cq.length)
+    bit.foreach { cb =>
+      val probing = cq(cb.cell)
+      if (probing.nonEmpty) {
+        if (packs(cb.cell) == null) {
+          packs(cb.cell) = pack(probing)
+          cellHeaps(cb.cell) = probing.map(heaps(_))
+        }
+        score(packs(cb.cell), cb, cellHeaps(cb.cell))
+      }
+    }
+  }
+
+  /** The largest number of queries probing one cell — kernel scratch size. */
+  private def maxProbing(cq: Array[Array[Int]]): Int =
+    cq.foldLeft(0)((mx, qs) => math.max(mx, qs.length))
+
+  /** Per cell, the indexes of the queries that probe it, ascending —
+    * the cell → queries routing of the per-cell fleet protocol
+    * ([[Ivf]], [[IvfSq8]], [[IvfPq]]). */
+  private def probingQueries(model: IvfModel, queries: Array[(Long, Seq[Double])],
+                             nProbe: Int): Array[Array[Int]] = {
+    val m = Array.fill(model.nCells)(Array.newBuilder[Int])
+    queries.zipWithIndex.foreach { case ((_, qv), qi) =>
+      model.nearestCells(qv, nProbe).foreach(c => m(c) += qi)
+    }
+    m.map(_.result())
+  }
+
+  private[search] def metricCode(m: VectorSearch.Metric): Int = m match {
     case VectorSearch.Cosine => Kernels.MetricCosine
     case VectorSearch.CosineUnit => Kernels.MetricCosineUnit
     case VectorSearch.DotProduct => Kernels.MetricDot

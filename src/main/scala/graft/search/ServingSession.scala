@@ -1,5 +1,8 @@
 package graft.search
 
+import scala.collection.immutable.ArraySeq
+import scala.reflect.ClassTag
+
 import graft.ann.Ann.IvfModel
 import graft.search.PackedIndex.{CellBlock, VecBlock}
 
@@ -73,6 +76,11 @@ object ServingSession {
       math.min(Runtime.getRuntime.availableProcessors(), math.max(1, nBlocks)),
       math.max(1, (workRows / math.max(1L, minRowsPerWorker)).toInt))
 
+  /** Work units below which the PQ scan stays serial: an ADC row is a
+    * handful of table adds, far cheaper than a float row, so the
+    * fork-join handoff pays off only past 64 Ki probed codes. */
+  private val PqParallelThreshold = 64 * 1024
+
   private def rank(heaps: Array[Kernels.TopKHeap], qids: Array[Long],
                    k: Int): Seq[(Long, Long, Double, Int)] = {
     val out = Vector.newBuilder[(Long, Long, Double, Int)]
@@ -102,6 +110,92 @@ object ServingSession {
     }
   }
 
+  /** Scores block `b` into `heaps` (one heap per query). */
+  private trait BlockScan { def apply(b: Int, heaps: Array[Kernels.TopKHeap]): Unit }
+
+  /** The one fan-out scan behind every resident session: score
+    * `nBlocks` blocks into `nq` top-k heaps. Work (rows × queries)
+    * under `threshold`, or a single worker by [[workersFor]], scans
+    * inline; otherwise worker `t` of `w` takes the strided blocks `t,
+    * t + w, t + 2w, …` on the common fork-join pool and the
+    * worker-local heaps are merged. Heaps keep the total order (score
+    * DESC, id ASC), so the merge order cannot change the rows.
+    * `newScan` runs once per worker and returns that worker's block
+    * scorer with its own scratch; read-only query state (packs,
+    * quantized queries, LUTs) is built once by the caller and shared. */
+  private def fanOut(nq: Int, k: Int, work: Long, nBlocks: Int,
+                     threshold: Long = ParallelWorkThreshold)(
+      newScan: () => BlockScan): Array[Kernels.TopKHeap] = {
+    def scan(first: Int, stride: Int): Array[Kernels.TopKHeap] = {
+      val heaps = Array.fill(nq)(new Kernels.TopKHeap(k))
+      val score = newScan()
+      var b = first
+      while (b < nBlocks) { score(b, heaps); b += stride }
+      heaps
+    }
+    val nThreads = workersFor(work, nBlocks)
+    if (work < threshold || nThreads <= 1) scan(0, 1)
+    else {
+      val merged = Array.fill(nq)(new Kernels.TopKHeap(k))
+      java.util.stream.IntStream.range(0, nThreads).parallel()
+        .mapToObj(t => scan(t, nThreads))
+        .collect(java.util.stream.Collectors.toList[Array[Kernels.TopKHeap]])
+        .forEach(w => mergeInto(merged, w))
+      merged
+    }
+  }
+
+  /** `(‖q‖², 1/‖q‖)` as [[Kernels.scoreSingle]] takes them (0 for a
+    * zero query). */
+  private def norms(qv: Array[Float]): (Double, Double) = {
+    var n2 = 0.0
+    var d = 0
+    while (d < qv.length) { n2 += qv(d).toDouble * qv(d); d += 1 }
+    (n2, if (n2 > 0) 1.0 / math.sqrt(n2) else 0.0)
+  }
+
+  /** One query's probe: the blocks of its `nProbe` nearest cells in
+    * probe order, the cell each block belongs to, and their row count. */
+  private final class Probe[B](val blocks: Array[B], val cells: Array[Int], val rows: Long)
+
+  private def probe[B <: PackedIndex.CellTile: ClassTag](
+      model: IvfModel, cellBlocks: Array[Array[B]], qv: Array[Double],
+      nProbe: Int): Probe[B] = {
+    val blocks = Array.newBuilder[B]
+    val cells = Array.newBuilder[Int]
+    var rows = 0L
+    model.nearestCells(ArraySeq.unsafeWrapArray(qv), nProbe).foreach { c =>
+      if (c >= 0 && c < cellBlocks.length)
+        cellBlocks(c).foreach { b => blocks += b; cells += c; rows += b.ids.length }
+    }
+    new Probe(blocks.result(), cells.result(), rows)
+  }
+
+  /** Probe-pruned search shared by the IVF sessions: per query, gather
+    * the probed blocks and run one [[fanOut]] over them (the probe set
+    * differs per query, so the fleet tile shape does not apply — a
+    * 100k-collection probe at 25% still scans ~25k rows, so large
+    * probes fan out). `scanFor(q, probe)` prepares the query once
+    * (normalize, quantize, LUT) and returns the per-worker scorer of
+    * `probe.blocks`, each scoring into `heaps(0)`. */
+  private def probeSearch[B <: PackedIndex.CellTile: ClassTag](
+      model: IvfModel, cellBlocks: Array[Array[B]],
+      queries: Seq[(Long, Seq[Double])], k: Int, nProbe: Int,
+      threshold: Long = ParallelWorkThreshold)(
+      scanFor: (Array[Double], Probe[B]) => () => BlockScan): Seq[(Long, Long, Double, Int)] = {
+    val qids = queries.map(_._1).toArray
+    val heaps = queries.iterator.map { case (_, q) =>
+      val qv = q.toArray
+      val p = probe(model, cellBlocks, qv, nProbe)
+      fanOut(1, k, p.rows, p.blocks.length, threshold)(scanFor(qv, p))(0)
+    }.toArray
+    rank(heaps, qids, k)
+  }
+
+  /** `(qid, id, score, rank)` → the `(id, score, rank)` of `searchOne`. */
+  private def dropQid(rows: Seq[(Long, Long, Double, Int)]): Seq[(Long, Double, Int)] =
+    rows.map { case (_, id, s, r) => (id, s, r) }
+
   /** Driver-local exact index: every block of the collection, scored
     * in-process. */
   final class Exact private[ServingSession] (val blocks: Array[VecBlock],
@@ -117,50 +211,28 @@ object ServingSession {
       val qids = queries.map(_._1).toArray
       val qVecs = queries.map(_._2.map(_.toFloat)).toArray
       if (qids.isEmpty || blocks.isEmpty) return Seq.empty
-      val code = m match {
-        case VectorSearch.Cosine => Kernels.MetricCosine
-        case VectorSearch.CosineUnit => Kernels.MetricCosineUnit
-        case VectorSearch.DotProduct => Kernels.MetricDot
-        case VectorSearch.Euclidean => Kernels.MetricEuclidean
-      }
-      if (qids.length == 1) return searchSingle(qids(0), qVecs(0), k, code)
-      // row-equivalents: each block row is scored against every query
-      val nThreads = workersFor(n * qids.length, blocks.length)
+      val code = PackedIndex.metricCode(m)
       val heaps =
-        if (n * qids.length < ParallelWorkThreshold || nThreads <= 1) {
-          val qp = Kernels.packQueries(qVecs)
-          val hs = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-          val out = new Array[Float](qids.length)
-          var b = 0
-          while (b < blocks.length) {
+        if (qids.length == 1) {
+          val qv = qVecs(0)
+          val (n2, invNorm) = norms(qv)
+          fanOut(1, k, n, blocks.length) { () => (b, hs) =>
             val blk = blocks(b)
-            Kernels.scoreTile(code, qp, blk.xs, blk.ids, blk.ids.length, hs, out, blk.norm2)
-            b += 1
+            Kernels.scoreSingle(code, qv, invNorm, n2, blk.xs, blk.ids,
+              blk.ids.length, blk.norm2, hs(0))
           }
-          hs
         } else {
-          // strided block chunks on the common FJ pool; the query pack
-          // is immutable and read-only — built ONCE and shared by all
+          // the query pack is read-only — built ONCE and shared by all
           // workers (review r4: packing per worker repeated the fleet
-          // transpose nThreads times); worker-local heaps merged with
-          // the same tie-breaking as the final rank
+          // transpose nThreads times); rows × queries is the work
           val qp = Kernels.packQueries(qVecs)
-          val workers = java.util.stream.IntStream.range(0, nThreads).parallel()
-            .mapToObj { t =>
-              val hs = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-              val out = new Array[Float](qids.length)
-              var b = t
-              while (b < blocks.length) {
-                val blk = blocks(b)
-                Kernels.scoreTile(code, qp, blk.xs, blk.ids, blk.ids.length, hs, out, blk.norm2)
-                b += nThreads
-              }
-              hs
+          fanOut(qids.length, k, n * qids.length, blocks.length) { () =>
+            val out = new Array[Float](qids.length)
+            (b, hs) => {
+              val blk = blocks(b)
+              Kernels.scoreTile(code, qp, blk.xs, blk.ids, blk.ids.length, hs, out, blk.norm2)
             }
-            .collect(java.util.stream.Collectors.toList[Array[Kernels.TopKHeap]])
-          val merged = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-          workers.forEach(w => mergeInto(merged, w))
-          merged
+          }
         }
       rank(heaps, qids, k)
     }
@@ -168,46 +240,7 @@ object ServingSession {
     /** One interactive query: `(id, score, rank)` top-k. */
     def searchOne(q: Array[Double], k: Int,
                   m: VectorSearch.Metric = VectorSearch.Cosine): Seq[(Long, Double, Int)] =
-      search(Seq((0L, q)), k, m).map { case (_, id, s, r) => (id, s, r) }
-
-    private def searchSingle(qid: Long, qv: Array[Float], k: Int,
-                             code: Int): Seq[(Long, Long, Double, Int)] = {
-      var n2 = 0.0
-      var d = 0
-      while (d < qv.length) { n2 += qv(d).toDouble * qv(d); d += 1 }
-      val invNorm = if (n2 > 0) 1.0 / math.sqrt(n2) else 0.0
-      val nThreads = workersFor(n, blocks.length)
-      val heaps =
-        if (n < ParallelWorkThreshold || nThreads <= 1) {
-          val h = new Kernels.TopKHeap(k)
-          var b = 0
-          while (b < blocks.length) {
-            val blk = blocks(b)
-            Kernels.scoreSingle(code, qv, invNorm, n2, blk.xs, blk.ids,
-              blk.ids.length, blk.norm2, h)
-            b += 1
-          }
-          Array(h)
-        } else {
-          val workers = java.util.stream.IntStream.range(0, nThreads).parallel()
-            .mapToObj { t =>
-              val h = new Kernels.TopKHeap(k)
-              var b = t
-              while (b < blocks.length) {
-                val blk = blocks(b)
-                Kernels.scoreSingle(code, qv, invNorm, n2, blk.xs, blk.ids,
-                  blk.ids.length, blk.norm2, h)
-                b += nThreads
-              }
-              h
-            }
-            .collect(java.util.stream.Collectors.toList[Kernels.TopKHeap])
-          val merged = new Kernels.TopKHeap(k)
-          workers.forEach(w => w.foreachEntry((s, id) => merged.offer(s, id)))
-          Array(merged)
-        }
-      rank(heaps, Array(qid), k)
-    }
+      dropQid(search(Seq((0L, q)), k, m))
   }
 
   /** Driver-local SQ8 index: every code block of the collection,
@@ -227,82 +260,30 @@ object ServingSession {
       val qids = queries.map(_._1).toArray
       val qVecs = queries.map(_._2.map(_.toFloat)).toArray
       if (qids.isEmpty || blocks.isEmpty) return Seq.empty
-      if (qids.length == 1) return searchSingle(qids(0), qVecs(0), k)
-      val nThreads = workersFor(n * qids.length, blocks.length)
       val heaps =
-        if (n * qids.length < ParallelWorkThreshold || nThreads <= 1) {
-          val qp = Kernels.packSq8Queries(qVecs)
-          val hs = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-          val out = new Array[Int](qids.length)
-          var b = 0
-          while (b < blocks.length) {
+        if (qids.length == 1) {
+          val sq = Kernels.quantizeSq8Query(qVecs(0))
+          fanOut(1, k, n, blocks.length) { () => (b, hs) =>
             val blk = blocks(b)
-            Kernels.scoreSq8Tile(qp, blk.codes, blk.scales, blk.ids,
-              blk.ids.length, hs, out, blk.norm2)
-            b += 1
+            Kernels.scoreSq8Single(sq, blk.codes, blk.scales,
+              blk.ids, blk.ids.length, blk.norm2, hs(0))
           }
-          hs
         } else {
           val qp = Kernels.packSq8Queries(qVecs)
-          val workers = java.util.stream.IntStream.range(0, nThreads).parallel()
-            .mapToObj { t =>
-              val hs = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-              val out = new Array[Int](qids.length)
-              var b = t
-              while (b < blocks.length) {
-                val blk = blocks(b)
-                Kernels.scoreSq8Tile(qp, blk.codes, blk.scales, blk.ids,
-                  blk.ids.length, hs, out, blk.norm2)
-                b += nThreads
-              }
-              hs
+          fanOut(qids.length, k, n * qids.length, blocks.length) { () =>
+            val out = new Array[Int](qids.length)
+            (b, hs) => {
+              val blk = blocks(b)
+              Kernels.scoreSq8Tile(qp, blk.codes, blk.scales, blk.ids,
+                blk.ids.length, hs, out, blk.norm2)
             }
-            .collect(java.util.stream.Collectors.toList[Array[Kernels.TopKHeap]])
-          val merged = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-          workers.forEach(w => mergeInto(merged, w))
-          merged
+          }
         }
       rank(heaps, qids, k)
     }
 
     def searchOne(q: Array[Double], k: Int): Seq[(Long, Double, Int)] =
-      search(Seq((0L, q)), k).map { case (_, id, s, r) => (id, s, r) }
-
-    private def searchSingle(qid: Long, qv: Array[Float],
-                             k: Int): Seq[(Long, Long, Double, Int)] = {
-      val sq = Kernels.quantizeSq8Query(qv)
-      val nThreads = workersFor(n, blocks.length)
-      val heaps =
-        if (n < ParallelWorkThreshold || nThreads <= 1) {
-          val h = new Kernels.TopKHeap(k)
-          var b = 0
-          while (b < blocks.length) {
-            val blk = blocks(b)
-            Kernels.scoreSq8Single(sq, blk.codes, blk.scales,
-              blk.ids, blk.ids.length, blk.norm2, h)
-            b += 1
-          }
-          Array(h)
-        } else {
-          val workers = java.util.stream.IntStream.range(0, nThreads).parallel()
-            .mapToObj { t =>
-              val h = new Kernels.TopKHeap(k)
-              var b = t
-              while (b < blocks.length) {
-                val blk = blocks(b)
-                Kernels.scoreSq8Single(sq, blk.codes, blk.scales,
-                  blk.ids, blk.ids.length, blk.norm2, h)
-                b += nThreads
-              }
-              h
-            }
-            .collect(java.util.stream.Collectors.toList[Kernels.TopKHeap])
-          val merged = new Kernels.TopKHeap(k)
-          workers.forEach(w => w.foreachEntry((s, id) => merged.offer(s, id)))
-          Array(merged)
-        }
-      rank(heaps, Array(qid), k)
-    }
+      dropQid(search(Seq((0L, q)), k))
   }
 
   /** Driver-local IVF index: per-cell blocks, probe-pruned scoring. */
@@ -314,56 +295,19 @@ object ServingSession {
       * [[Kernels.scoreSingle]] — the probe set differs per query, so the
       * fleet tile shape does not apply). */
     def search(queries: Seq[(Long, Seq[Double])], k: Int,
-               nProbe: Int): Seq[(Long, Long, Double, Int)] = {
-      val qArr = queries.toArray
-      val qids = qArr.map(_._1)
-      if (qids.isEmpty) return Seq.empty
-      val heaps = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-      var qi = 0
-      while (qi < qArr.length) {
-        val qv = qArr(qi)._2.toArray
+               nProbe: Int): Seq[(Long, Long, Double, Int)] =
+      probeSearch(model, cellBlocks, queries, k, nProbe) { (qv, p) =>
         val qf = qv.map(_.toFloat)
-        var n2 = 0.0
-        var d = 0
-        while (d < qf.length) { n2 += qf(d).toDouble * qf(d); d += 1 }
-        val invNorm = if (n2 > 0) 1.0 / math.sqrt(n2) else 0.0
-        val h = heaps(qi)
-        // gather the probed blocks, then fan out when the probed work is
-        // large enough (a 100k-collection probe at 25% scans ~25k rows —
-        // single-threaded it costs more than the exact parallel scan)
-        val probed = scala.collection.mutable.ArrayBuffer.empty[CellBlock]
-        var probedRows = 0L
-        model.nearestCells(qv, nProbe).foreach { c =>
-          if (c >= 0 && c < cellBlocks.length)
-            cellBlocks(c).foreach { b => probed += b; probedRows += b.ids.length }
+        val (n2, invNorm) = norms(qf)
+        () => (b, hs) => {
+          val blk = p.blocks(b)
+          Kernels.scoreSingle(Kernels.MetricCosine, qf, invNorm, n2,
+            blk.xs, blk.ids, blk.ids.length, blk.norm2, hs(0))
         }
-        val nThreads = workersFor(probedRows, probed.length)
-        if (probedRows < ParallelWorkThreshold || nThreads <= 1) {
-          probed.foreach(blk => Kernels.scoreSingle(Kernels.MetricCosine, qf,
-            invNorm, n2, blk.xs, blk.ids, blk.ids.length, blk.norm2, h))
-        } else {
-          val workers = java.util.stream.IntStream.range(0, nThreads).parallel()
-            .mapToObj { t =>
-              val wh = new Kernels.TopKHeap(k)
-              var b = t
-              while (b < probed.length) {
-                val blk = probed(b)
-                Kernels.scoreSingle(Kernels.MetricCosine, qf, invNorm, n2,
-                  blk.xs, blk.ids, blk.ids.length, blk.norm2, wh)
-                b += nThreads
-              }
-              wh
-            }
-            .collect(java.util.stream.Collectors.toList[Kernels.TopKHeap])
-          workers.forEach(w => w.foreachEntry((s, id) => h.offer(s, id)))
-        }
-        qi += 1
       }
-      rank(heaps, qids, k)
-    }
 
     def searchOne(q: Seq[Double], k: Int, nProbe: Int): Seq[(Long, Double, Int)] =
-      search(Seq((0L, q)), k, nProbe).map { case (_, id, s, r) => (id, s, r) }
+      dropQid(search(Seq((0L, q)), k, nProbe))
   }
 
   /** Driver-local IVF×SQ8 index: per-cell SQ8 code blocks, probe-pruned
@@ -378,49 +322,18 @@ object ServingSession {
       val cellBlocks: Array[Array[PackedIndex.Sq8CellBlock]], val dim: Int) {
 
     def search(queries: Seq[(Long, Seq[Double])], k: Int,
-               nProbe: Int): Seq[(Long, Long, Double, Int)] = {
-      val qArr = queries.toArray
-      val qids = qArr.map(_._1)
-      if (qids.isEmpty) return Seq.empty
-      val heaps = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-      var qi = 0
-      while (qi < qArr.length) {
-        val qv = qArr(qi)._2.toArray
+               nProbe: Int): Seq[(Long, Long, Double, Int)] =
+      probeSearch(model, cellBlocks, queries, k, nProbe) { (qv, p) =>
         val sq = Kernels.quantizeSq8Query(qv.map(_.toFloat))
-        val h = heaps(qi)
-        val probed = scala.collection.mutable.ArrayBuffer.empty[PackedIndex.Sq8CellBlock]
-        var probedRows = 0L
-        model.nearestCells(qv, nProbe).foreach { c =>
-          if (c >= 0 && c < cellBlocks.length)
-            cellBlocks(c).foreach { b => probed += b; probedRows += b.ids.length }
+        () => (b, hs) => {
+          val blk = p.blocks(b)
+          Kernels.scoreSq8Single(sq, blk.codes, blk.scales,
+            blk.ids, blk.ids.length, blk.norm2, hs(0))
         }
-        val nThreads = workersFor(probedRows, probed.length)
-        if (probedRows < ParallelWorkThreshold || nThreads <= 1) {
-          probed.foreach(blk => Kernels.scoreSq8Single(sq, blk.codes, blk.scales,
-            blk.ids, blk.ids.length, blk.norm2, h))
-        } else {
-          val workers = java.util.stream.IntStream.range(0, nThreads).parallel()
-            .mapToObj { t =>
-              val wh = new Kernels.TopKHeap(k)
-              var b = t
-              while (b < probed.length) {
-                val blk = probed(b)
-                Kernels.scoreSq8Single(sq, blk.codes, blk.scales,
-                  blk.ids, blk.ids.length, blk.norm2, wh)
-                b += nThreads
-              }
-              wh
-            }
-            .collect(java.util.stream.Collectors.toList[Kernels.TopKHeap])
-          workers.forEach(w => w.foreachEntry((s, id) => h.offer(s, id)))
-        }
-        qi += 1
       }
-      rank(heaps, qids, k)
-    }
 
     def searchOne(q: Seq[Double], k: Int, nProbe: Int): Seq[(Long, Double, Int)] =
-      search(Seq((0L, q)), k, nProbe).map { case (_, id, s, r) => (id, s, r) }
+      dropQid(search(Seq((0L, q)), k, nProbe))
   }
 
   /** Driver-local IVF-PQ index: per-cell CODE blocks scored by ADC —
@@ -434,66 +347,32 @@ object ServingSession {
       val cellBlocks: Array[Array[PackedIndex.PqCellBlock]],
       val residual: Boolean = false) {
 
+    /** A 10M-row probe at 12.5% scans 1.25M codes — ~30 ms serial, ~ms
+      * fanned out; the LUT is read-only and shared by the workers.
+      * Residual codes add the probe's `dot(q, centroid)` per block (see
+      * [[PackedIndex.IvfPq]]). */
     def search(queries: Seq[(Long, Seq[Double])], k: Int,
-               nProbe: Int): Seq[(Long, Long, Double, Int)] = {
-      val qArr = queries.toArray
-      val qids = qArr.map(_._1)
-      if (qids.isEmpty) return Seq.empty
-      val heaps = Array.fill(qids.length)(new Kernels.TopKHeap(k))
-      val m = pq.m
-      var qi = 0
-      while (qi < qArr.length) {
-        val qv = qArr(qi)._2.toArray
+               nProbe: Int): Seq[(Long, Long, Double, Int)] =
+      probeSearch(ivf, cellBlocks, queries, k, nProbe, PqParallelThreshold) { (qv, p) =>
         val qf = graft.ann.Pq.l2normalize(qv.map(_.toFloat))
         val lut = pq.lookupTable(qf)
-        val h = heaps(qi)
-        // gather the probed blocks (with the residual dot(q, centroid)
-        // per-cell constant — see PackedIndex.IvfPq); fan out across
-        // threads when the probed row count is large (a 10M-row probe
-        // at 12.5% scans 1.25M codes — sequential it is ~30 ms, strided
-        // it is ~ms; the LUT is read-only and shared, heaps merge per
-        // worker)
-        val probed = scala.collection.mutable.ArrayBuffer.empty[PackedIndex.PqCellBlock]
-        val probedOff = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var probedRows = 0L
-        ivf.nearestCells(qv, nProbe).foreach { c =>
-          if (c >= 0 && c < cellBlocks.length) {
-            val off = if (residual) PackedIndex.qDotCentroid(qf, ivf.centroids(c)) else 0.0
-            cellBlocks(c).foreach { b =>
-              probed += b; probedOff += off; probedRows += b.ids.length
-            }
-          }
-        }
-        @inline def scan(bi: Int, into: Kernels.TopKHeap): Unit = {
-          val b = probed(bi)
-          val off = probedOff(bi)
-          val nRows = b.ids.length
+        val offs = p.cells.map(c =>
+          if (residual) PackedIndex.qDotCentroid(qf, ivf.centroids(c)) else 0.0)
+        val m = pq.m
+        () => (bi, hs) => {
+          val b = p.blocks(bi)
+          val off = offs(bi)
+          val h = hs(0)
           var r = 0
-          while (r < nRows) {
-            into.offer(off + pq.adcScore(lut, b.codes, r * m), b.ids(r))
+          while (r < b.ids.length) {
+            h.offer(off + pq.adcScore(lut, b.codes, r * m), b.ids(r))
             r += 1
           }
         }
-        val nThreads = workersFor(probedRows, probed.length)
-        if (probedRows < 64 * 1024 || nThreads <= 1) probed.indices.foreach(scan(_, h))
-        else {
-          val workers = java.util.stream.IntStream.range(0, nThreads).parallel()
-            .mapToObj { t =>
-              val wh = new Kernels.TopKHeap(k)
-              var b = t
-              while (b < probed.length) { scan(b, wh); b += nThreads }
-              wh
-            }
-            .collect(java.util.stream.Collectors.toList[Kernels.TopKHeap])
-          workers.forEach(w => w.foreachEntry((s, id) => h.offer(s, id)))
-        }
-        qi += 1
       }
-      rank(heaps, qids, k)
-    }
 
     def searchOne(q: Seq[Double], k: Int, nProbe: Int): Seq[(Long, Double, Int)] =
-      search(Seq((0L, q)), k, nProbe).map { case (_, id, s, r) => (id, s, r) }
+      dropQid(search(Seq((0L, q)), k, nProbe))
   }
 
   /** FLEET-throughput crossover (VERDICT r7 #4). The driver-resident
@@ -512,6 +391,32 @@ object ServingSession {
                              crossoverRows: Long = FleetCrossoverRows): Boolean =
     nq > 1 && n >= crossoverRows
 
+  /** The one routed dispatch behind [[Routed]], [[RoutedIvf]],
+    * [[RoutedSq8]] and [[RoutedIvfSq8]]: a search answers on the
+    * `resident` session unless there is none (the byte cap refused the
+    * snapshot) or the handle prefers the cluster for this call; the
+    * distributed answer is collected in resident row order
+    * ([[collectRanked]]). Each handle adds only its search signature
+    * and, for [[Routed]], the fleet crossover. */
+  sealed abstract class RoutedHandle[S] private[ServingSession] (val resident: Option[S]) {
+    @volatile private var _lastPath: String = ""
+    /** "resident" | "distributed" — which path answered the latest
+      * search (bench/test observability). */
+    def lastPath: String = _lastPath
+
+    protected final def dispatch(qids: Seq[Long], preferDistributed: Boolean = false)(
+        onResident: S => Seq[(Long, Long, Double, Int)],
+        onCluster: => org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Int)] =
+      resident match {
+        case Some(s) if !preferDistributed =>
+          _lastPath = "resident"
+          onResident(s)
+        case _ =>
+          _lastPath = "distributed"
+          collectRanked(onCluster, qids)
+      }
+  }
+
   /** Both exact paths under ONE handle, dispatched per call
     * (VERDICT r7 #4: the 1M crossover was documented in the bench but
     * the caller had to read it — now the handle routes): single queries
@@ -522,23 +427,12 @@ object ServingSession {
     * id ASC)` rank (see [[Exact]]'s parity note). */
   final class Routed private[ServingSession] (
       val idx: PackedIndex.Exact,
-      val resident: Option[Exact],
-      val crossoverRows: Long) {
-    @volatile private var _lastPath: String = ""
-    /** "resident" | "distributed" — which path answered the latest
-      * search (bench/test observability). */
-    def lastPath: String = _lastPath
-
+      resident: Option[Exact],
+      val crossoverRows: Long) extends RoutedHandle[Exact](resident) {
     def search(queries: Seq[(Long, Array[Double])], k: Int,
                m: VectorSearch.Metric = VectorSearch.Cosine): Seq[(Long, Long, Double, Int)] =
-      resident match {
-        case Some(s) if !preferDistributedFleet(idx.n, queries.length, crossoverRows) =>
-          _lastPath = "resident"
-          s.search(queries, k, m)
-        case _ =>
-          _lastPath = "distributed"
-          collectRanked(idx.search(queries, k, m), queries.map(_._1))
-      }
+      dispatch(queries.map(_._1), preferDistributedFleet(idx.n, queries.length, crossoverRows))(
+        _.search(queries, k, m), idx.search(queries, k, m))
   }
 
   /** Collect a distributed `(qid, id, score, rank)` result and order
@@ -594,22 +488,10 @@ object ServingSession {
     * handle only when they accept that contract. */
   final class RoutedIvf private[ServingSession] (
       val idx: PackedIndex.Ivf,
-      val resident: Option[Ivf]) {
-    @volatile private var _lastPath: String = ""
-    /** "resident" | "distributed" — which path answered the latest
-      * search (bench/test observability). */
-    def lastPath: String = _lastPath
-
+      resident: Option[Ivf]) extends RoutedHandle[Ivf](resident) {
     def search(queries: Seq[(Long, Seq[Double])], k: Int,
                nProbe: Int): Seq[(Long, Long, Double, Int)] =
-      resident match {
-        case Some(s) =>
-          _lastPath = "resident"
-          s.search(queries, k, nProbe)
-        case None =>
-          _lastPath = "distributed"
-          collectRanked(idx.search(queries, k, nProbe), queries.map(_._1))
-      }
+      dispatch(queries.map(_._1))(_.search(queries, k, nProbe), idx.search(queries, k, nProbe))
   }
 
   /** Routed approximate serving over a packed IVF index — see
@@ -627,22 +509,10 @@ object ServingSession {
     * dispatch flip never changes the rows. */
   final class RoutedSq8 private[ServingSession] (
       val idx: PackedIndex.Sq8,
-      val resident: Option[Sq8]) {
-    @volatile private var _lastPath: String = ""
-    /** "resident" | "distributed" — which path answered the latest
-      * search (bench/test observability). */
-    def lastPath: String = _lastPath
-
+      resident: Option[Sq8]) extends RoutedHandle[Sq8](resident) {
     def search(queries: Seq[(Long, Array[Double])],
                k: Int): Seq[(Long, Long, Double, Int)] =
-      resident match {
-        case Some(s) =>
-          _lastPath = "resident"
-          s.search(queries, k)
-        case None =>
-          _lastPath = "distributed"
-          collectRanked(idx.search(queries, k), queries.map(_._1))
-      }
+      dispatch(queries.map(_._1))(_.search(queries, k), idx.search(queries, k))
   }
 
   /** Routed quantized serving over a packed SQ8 index — see
@@ -672,22 +542,10 @@ object ServingSession {
     * kernel, so a dispatch flip never changes the rows. */
   final class RoutedIvfSq8 private[ServingSession] (
       val idx: PackedIndex.IvfSq8,
-      val resident: Option[IvfSq8]) {
-    @volatile private var _lastPath: String = ""
-    /** "resident" | "distributed" — which path answered the latest
-      * search (bench/test observability). */
-    def lastPath: String = _lastPath
-
+      resident: Option[IvfSq8]) extends RoutedHandle[IvfSq8](resident) {
     def search(queries: Seq[(Long, Seq[Double])], k: Int,
                nProbe: Int): Seq[(Long, Long, Double, Int)] =
-      resident match {
-        case Some(s) =>
-          _lastPath = "resident"
-          s.search(queries, k, nProbe)
-        case None =>
-          _lastPath = "distributed"
-          collectRanked(idx.search(queries, k, nProbe), queries.map(_._1))
-      }
+      dispatch(queries.map(_._1))(_.search(queries, k, nProbe), idx.search(queries, k, nProbe))
   }
 
   /** Routed cell-pruned-quantized serving over a packed IVF×SQ8 index —
@@ -787,43 +645,36 @@ object ServingSession {
   /** Driver-resident PQ serving: collect the CODE blocks (tiny — the
     * whole point) and group by cell. Same budget knob as the float
     * sessions; at m=8 it admits ~400M rows before refusing. */
-  def fromIvfPq(idx: PackedIndex.IvfPq, maxBytes: Long = DefaultMaxBytes): Option[IvfPq] = {
-    if (idx.n <= 0 || pqBytes(idx.n, idx.pq.m) > maxBytes) None
-    else {
-      val all = idx.blocks.collect()
-      val nCells = idx.ivf.nCells
-      val grouped = Array.fill(nCells)(scala.collection.mutable.ArrayBuffer.empty[PackedIndex.PqCellBlock])
-      all.foreach(b => if (b.cell >= 0 && b.cell < nCells) grouped(b.cell) += b)
-      Some(new IvfPq(idx.ivf, idx.pq, grouped.map(_.toArray), idx.residual))
-    }
-  }
+  def fromIvfPq(idx: PackedIndex.IvfPq, maxBytes: Long = DefaultMaxBytes): Option[IvfPq] =
+    residentCells(idx.n, pqBytes(idx.n, idx.pq.m), maxBytes, idx.blocks, idx.ivf.nCells)
+      .map(new IvfPq(idx.ivf, idx.pq, _, idx.residual))
 
   /** Pull a distributed IVF×SQ8 index's code blocks to the driver when
     * they fit `maxBytes` — [[sq8Bytes]] sizing, so the same budget knob
     * admits ~4× the rows of [[fromIvf]]. None = stay on the cluster
     * path. */
-  def fromIvfSq8(idx: PackedIndex.IvfSq8, maxBytes: Long = DefaultMaxBytes): Option[IvfSq8] = {
-    if (idx.n <= 0 || sq8Bytes(idx.n, idx.dim) > maxBytes) None
-    else {
-      val all = idx.blocks.collect()
-      val nCells = idx.model.nCells
-      val grouped = Array.fill(nCells)(scala.collection.mutable.ArrayBuffer.empty[PackedIndex.Sq8CellBlock])
-      all.foreach(b => if (b.cell >= 0 && b.cell < nCells) grouped(b.cell) += b)
-      Some(new IvfSq8(idx.model, grouped.map(_.toArray), idx.dim))
-    }
-  }
+  def fromIvfSq8(idx: PackedIndex.IvfSq8, maxBytes: Long = DefaultMaxBytes): Option[IvfSq8] =
+    residentCells(idx.n, sq8Bytes(idx.n, idx.dim), maxBytes, idx.blocks, idx.model.nCells)
+      .map(new IvfSq8(idx.model, _, idx.dim))
 
   /** Same for an IVF index: cell blocks grouped by cell id. The size
     * guard uses the index's build-time row count, so nothing is
     * collected when the collection is over the cap. */
-  def fromIvf(idx: PackedIndex.Ivf, maxBytes: Long = DefaultMaxBytes): Option[Ivf] = {
-    if (idx.n <= 0 || exactBytes(idx.n, idx.dim) > maxBytes) None
+  def fromIvf(idx: PackedIndex.Ivf, maxBytes: Long = DefaultMaxBytes): Option[Ivf] =
+    residentCells(idx.n, exactBytes(idx.n, idx.dim), maxBytes, idx.blocks, idx.model.nCells)
+      .map(new Ivf(idx.model, _, idx.dim))
+
+  /** The one cell-grouping step of the IVF factories: collect a packed
+    * cell index's blocks when its `bytes` estimate fits `maxBytes`
+    * (None = stay on the cluster path), grouped by cell id in collect
+    * order; blocks with an out-of-range cell are dropped. */
+  private def residentCells[B <: PackedIndex.CellTile: ClassTag](
+      n: Long, bytes: Long, maxBytes: Long,
+      blocks: org.apache.spark.rdd.RDD[B], nCells: Int): Option[Array[Array[B]]] =
+    if (n <= 0 || bytes > maxBytes) None
     else {
-      val all = idx.blocks.collect()
-      val nCells = idx.model.nCells
-      val grouped = Array.fill(nCells)(scala.collection.mutable.ArrayBuffer.empty[CellBlock])
-      all.foreach(b => if (b.cell >= 0 && b.cell < nCells) grouped(b.cell) += b)
-      Some(new Ivf(idx.model, grouped.map(_.toArray), idx.dim))
+      val grouped = Array.fill(nCells)(Array.newBuilder[B])
+      blocks.collect().foreach(b => if (b.cell >= 0 && b.cell < nCells) grouped(b.cell) += b)
+      Some(grouped.map(_.result()))
     }
-  }
 }
