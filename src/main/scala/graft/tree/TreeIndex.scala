@@ -2,6 +2,8 @@ package graft.tree
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,6 +41,36 @@ final class TreeIndex(val spark: SparkSession, val root: String) {
     else Seq.empty[TreeNodeRow].toDS().toDF()
   }
 
+  /** Distinct documents in [[nodes]], kept with the index so that
+    * [[searchAll]]'s per-document quota runs no Spark job. Keyed on the
+    * node table's file listing: [[indexDocument]] and [[removeDocument]]
+    * move it in place, while any other change to the files (a bulk
+    * [[indexCorpus]], another handle on the same root) leaves it stale,
+    * and the next search counts once. */
+  @volatile private var docCount: Option[(Set[String], Long)] = None
+
+  private def nodeFiles: Set[String] =
+    if (!Files.exists(nodesPath)) Set.empty
+    else {
+      val ls = Files.list(nodesPath)
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    }
+
+  private def documentCount: Long = {
+    val files = nodeFiles
+    docCount.collect { case (f, c) if f == files => c }.getOrElse {
+      val c = if (files.isEmpty) 0L else nodes.select("doc_id").distinct().count()
+      docCount = Some((files, c))
+      c
+    }
+  }
+
+  /** This handle's write over node files `before` moved the document
+    * count by `delta`: keep the count if it was current before. */
+  private def wrote(before: Set[String], delta: Long): Unit =
+    docCount = docCount.orElse(if (before.isEmpty) Some((before, 0L)) else None)
+      .collect { case (f, c) if f == before => (nodeFiles, c + delta) }
+
   /** Parse + build + append one document
     * (`TreeIndex.js:112-142`). Returns node count. */
   def indexDocument(docId: String, content: String, format: String = "text",
@@ -46,7 +78,9 @@ final class TreeIndex(val spark: SparkSession, val root: String) {
     require(!isIndexed(docId), s"""Document "$docId" already indexed""")
     events.emit("index:start", Map("docId" -> docId)) // TreeIndex.js:115
     val rows = TreeParsers.buildRows(docId, content, format, title)
+    val before = nodeFiles
     rows.toDS().toDF().write.mode(SaveMode.Append).parquet(nodesPath.toString)
+    wrote(before, 1)
     events.emit("index:complete", // TreeIndex.js:140
       Map("docId" -> docId, "nodeCount" -> rows.length))
     rows.length.toLong
@@ -73,8 +107,10 @@ final class TreeIndex(val spark: SparkSession, val root: String) {
   def removeDocument(docId: String): Boolean = {
     if (!isIndexed(docId)) return false
     val tmp = Paths.get(root, "_tree_nodes_tmp")
+    val before = nodeFiles
     nodes.filter(col("doc_id") =!= docId).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     graft.engine.FusionEngine.atomicSwap(nodesPath, tmp)
+    wrote(before, -1)
     true
   }
 
@@ -104,8 +140,7 @@ final class TreeIndex(val spark: SparkSession, val root: String) {
                 docIds: Option[Seq[String]] = None): DataFrame = {
     val base = scoredLeaves(query, None)
     val scoped = docIds.map(ids => base.filter(col("doc_id").isin(ids.map(lit(_)): _*))).getOrElse(base)
-    val nDocs = math.max(1, docIds.map(_.size.toLong).getOrElse(
-      nodes.select("doc_id").distinct().count()))
+    val nDocs = math.max(1, docIds.map(_.size.toLong).getOrElse(documentCount))
     val quota = math.ceil(maxResults.toDouble / nDocs).toInt
     val w = Window.partitionBy("doc_id").orderBy(desc("score"), asc("node_id"))
     scoped.withColumn("_rn", row_number().over(w))

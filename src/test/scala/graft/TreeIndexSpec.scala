@@ -121,4 +121,56 @@ class TreeIndexSpec extends AnyFunSuite {
     assert(fb.head.getAs[Double]("score") == 1.0) // 2/2 keyword terms
     assert(fb.head.getAs[String]("reasoning") == "fallback keyword match")
   }
+
+  test("searchAll keeps the document count with the index: no count job, quota right after index and remove") {
+    val t = freshTree()
+    // per doc: one leaf scoring 1.0, one 0.5, one 0 (gated out)
+    def doc(name: String) =
+      s"# $name\n## Safety rules\nThe rules apply.\n## Safety gear\nWear gear.\n## Other\nNothing."
+    Seq("d1", "d2", "d3").foreach(d => t.indexDocument(d, doc(d), "markdown"))
+    def top3(tree: TreeIndex): Seq[(String, String)] =
+      tree.searchAll("safety rules", maxResults = 3).collect()
+        .map(r => (r.getAs[String]("doc_id"), r.getAs[String]("node_id"))).toSeq
+    def maxPerDoc(rows: Seq[(String, String)]): Int = rows.groupBy(_._1).values.map(_.size).max
+    // a handle opened on the same root counts afresh: the reference quota
+    def fresh: Seq[(String, String)] = top3(new TreeIndex(spark, t.root))
+
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b)))
+    }
+    def inGroup[A](group: String)(body: => A): A = {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    top3(t) // warm: plan caches
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val all = inGroup("all")(top3(t))
+      inGroup("scoped")(t.searchAll("safety rules", maxResults = 3,
+        docIds = Some(Seq("d1", "d2", "d3"))).collect())
+      assert(all.size == 3 && maxPerDoc(all) == 1) // 3 docs: quota 1
+      assert(all == fresh)
+      assert(t.removeDocument("d3"))
+      val afterRemove = inGroup("after_remove")(top3(t))
+      assert(maxPerDoc(afterRemove) == 2, afterRemove) // 2 docs: quota 2
+      assert(afterRemove == fresh)
+      t.indexDocument("d4", doc("d4"), "markdown")
+      val afterIndex = inGroup("after_index")(top3(t))
+      assert(afterIndex.size == 3 && maxPerDoc(afterIndex) == 1, afterIndex)
+      assert(afterIndex == fresh)
+      // the bus delivers in order: once the marker job is seen, so are the above
+      inGroup("marker")(spark.range(1).collect())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.containsKey("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      def n(g: String): Int = jobs.getOrDefault(g, 0).intValue
+      // the quota costs no job: unscoped runs exactly the jobs of the
+      // same search scoped to an explicit document list
+      assert(n("scoped") > 0 && n("all") == n("scoped"), s"all ${n("all")} vs scoped ${n("scoped")}")
+      assert(n("after_remove") == n("scoped") && n("after_index") == n("scoped"),
+        s"after remove ${n("after_remove")}, after index ${n("after_index")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
