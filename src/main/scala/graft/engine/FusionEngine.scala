@@ -476,24 +476,10 @@ final class FusionEngine(val spark: SparkSession, val root: String) {
     } else {
       servingCache.remove(name)
       val built = buildServing(name, cfg, ver, maxBytes)
-      built.foreach { h =>
-        // AGGREGATE budget across all cached snapshots (review r4: N
-        // collections each under the per-collection cap could otherwise
-        // pin N × cap of driver memory): evict least-recently-used
-        // handles until this one fits; if it can't fit at all it is
-        // returned un-cached (served once, GC'd after use).
-        servingCache.synchronized {
-          var others = servingCache.values().toArray(Array.empty[ServingHandle])
-            .filter(_.collection != name).sortBy(_.lastUsedMs)
-          var total = others.map(_.estBytes).sum + h.estBytes
-          while (total > FusionEngine.AggregateServingBytes && others.nonEmpty) {
-            servingCache.remove(others.head.collection)
-            total -= others.head.estBytes
-            others = others.tail
-          }
-          if (total <= FusionEngine.AggregateServingBytes) servingCache.put(name, h)
-        }
-      }
+      // AGGREGATE budget across all cached snapshots (review r4: N
+      // collections each under the per-collection cap could otherwise
+      // pin N × cap of driver memory)
+      built.foreach(h => cacheWithinBudget(servingCache, name, h)(_.estBytes, _.lastUsedMs))
       built
     }
   }
@@ -633,20 +619,27 @@ final class FusionEngine(val spark: SparkSession, val root: String) {
     Some(h)
   }
 
-  /** Same aggregate budget discipline as servingCache (r11 review):
-    * LRU-evict other graphs until this one fits; an unfittable graph
-    * is returned un-cached (served once, GC'd after use). */
+  /** Same aggregate budget discipline as servingCache (r11 review). */
   private def cacheHnsw(name: String, h: HnswHandle): Unit =
-    hnswCache.synchronized {
-      var others = hnswCache.values().toArray(Array.empty[HnswHandle])
-        .filter(_.collection != name).sortBy(_.lastUsedMs)
-      var total = others.map(_.estBytes).sum + h.estBytes
+    cacheWithinBudget(hnswCache, name, h)(_.estBytes, _.lastUsedMs)
+
+  /** The aggregate-budget admission both driver caches share: evict
+    * other collections' handles, least recently used first, until `h`
+    * fits [[FusionEngine.AggregateServingBytes]], then cache it under
+    * `name`; a handle that cannot fit even alone stays un-cached
+    * (served once, GC'd after use). */
+  private def cacheWithinBudget[H](cache: java.util.concurrent.ConcurrentHashMap[String, H],
+                                   name: String, h: H)(
+      bytes: H => Long, lastUsedMs: H => Long): Unit =
+    cache.synchronized {
+      var others = cache.asScala.toSeq.filter(_._1 != name).sortBy(e => lastUsedMs(e._2))
+      var total = others.map(e => bytes(e._2)).sum + bytes(h)
       while (total > FusionEngine.AggregateServingBytes && others.nonEmpty) {
-        hnswCache.remove(others.head.collection)
-        total -= others.head.estBytes
+        cache.remove(others.head._1)
+        total -= bytes(others.head._2)
         others = others.tail
       }
-      if (total <= FusionEngine.AggregateServingBytes) hnswCache.put(name, h)
+      if (total <= FusionEngine.AggregateServingBytes) cache.put(name, h)
     }
 
   /** Content reconcile of a [[HnswHandle]] against the live table —

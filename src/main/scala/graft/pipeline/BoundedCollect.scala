@@ -28,6 +28,22 @@ import org.apache.spark.rdd.RDD
   * IS the table). */
 private[graft] object BoundedCollect {
 
+  /** The row bound a fast path reads from system property `prop`,
+    * re-read on every call: unset or unparsable → `default`; a negative
+    * value forces the fallback ([[tryCollect]] returns None without
+    * running a job — the parity specs' switch). */
+  def limit(prop: String, default: Long): Long =
+    try sys.props.getOrElse(prop, default.toString).toLong
+    catch { case _: NumberFormatException => default }
+
+  /** `graft.span.hotBroadcastMax`: the span-family bound (keys of the
+    * hot-gram, frequent-line and DSIR vocab tables), default 4M. */
+  def spanHotMax: Long = limit("graft.span.hotBroadcastMax", 4194304L)
+
+  /** `graft.vocab.broadcastMax`: the surprisal vocab bound (words),
+    * default 1M. */
+  def vocabMax: Long = limit("graft.vocab.broadcastMax", 1048576L)
+
   private def capFor(max: Long, numPartitions: Int): Int = {
     val p = math.max(numPartitions, 1)
     val spread = 4L * max / p + 4096L

@@ -440,9 +440,7 @@ object CorpusOps {
       : Either[DataFrame, org.apache.spark.broadcast.Broadcast[LongHashSet]] = {
     val spark = hot.sparkSession
     import spark.implicits._
-    val max =
-      try sys.props.getOrElse("graft.span.hotBroadcastMax", "4194304").toLong
-      catch { case _: NumberFormatException => 4194304L }
+    val max = BoundedCollect.spanHotMax
     if (max < 0) return Left(hot)
     val rdd = hot.select(col("gram").cast("long")).as[Long].rdd
     BoundedCollect.tryCollect(rdd, max) match {
@@ -789,9 +787,7 @@ object CorpusOps {
     val decided: Either[DataFrame, org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]]] =
       if (hashedLines) Left(frequent)
       else {
-        val max =
-          try sys.props.getOrElse("graft.span.hotBroadcastMax", "4194304").toLong
-          catch { case _: NumberFormatException => 4194304L }
+        val max = BoundedCollect.spanHotMax
         // ONE decision job (BoundedCollect, r19) — the fallback join
         // reuses the probe job's shuffle map side through the shared
         // RDD object; a negative knob skips the probe entirely

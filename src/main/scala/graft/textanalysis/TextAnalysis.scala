@@ -154,9 +154,7 @@ object TextAnalysis {
     // fallback (real corpora: vocab ≫ bound) is the previous plan over
     // the persisted vocab — one count shuffle, AQE-broadcast join, no
     // instance row across the wire.
-    val maxV =
-      try sys.props.getOrElse("graft.vocab.broadcastMax", "1048576").toLong
-      catch { case _: NumberFormatException => 1048576L }
+    val maxV = graft.pipeline.BoundedCollect.vocabMax
     // ONE decision job (BoundedCollect, r19 — was persist+count+collect)
     val vocabRdd = vocab.as[(String, Long)].rdd
     graft.pipeline.BoundedCollect.tryCollect(vocabRdd, maxV) match {
@@ -798,9 +796,7 @@ object TextAnalysis {
     // cast, and the 4dp round replays Catalyst's BigDecimal HALF_UP.
     // The fallback (vocab ≫ bound) is the previous plan over the
     // persisted vocab table — nothing recomputed, topology unchanged.
-    val maxV =
-      try sys.props.getOrElse("graft.span.hotBroadcastMax", "4194304").toLong
-      catch { case _: NumberFormatException => 4194304L }
+    val maxV = graft.pipeline.BoundedCollect.spanHotMax
     // ONE decision job (BoundedCollect, r19 — was persist+count+
     // collect), packed into three aligned primitive arrays so the
     // driver never retains a boxed tuple per vocab row (ADVICE r18:

@@ -193,22 +193,28 @@ class FusionEngineSpec extends AnyFunSuite {
   }
 
   test("serving cache: aggregate budget LRU-evicts the least recently used snapshot") {
-    val e = freshEngine()
-    insertDemo(e, "c1")
-    insertDemo(e, "c2")
-    val h1 = e.serving("c1").get
-    try {
-      // budget fits exactly one snapshot
-      sys.props("graft.serving.aggregate.bytes") = (h1.estimatedBytes + 16).toString
-      Thread.sleep(2) // distinct lastUsed timestamps
-      val h2 = e.serving("c2").get // over budget with h1 -> h1 (LRU) evicted
-      assert(e.serving("c2").get eq h2) // h2 is the cached resident
-      val h1b = e.serving("c1").get // rebuilt: the eviction was real
-      assert(!(h1b eq h1))
-    } finally sys.props -= "graft.serving.aggregate.bytes"
-    // with the default budget both fit again and cache normally
-    val h2c = e.serving("c2").get
-    assert(e.serving("c2").get eq h2c)
+    // one admission rule for both driver caches: exact snapshots and HNSW graphs
+    def evictsLru[H <: AnyRef](cache: String)(get: (FusionEngine, String) => H)(
+        bytes: H => Long): Unit = {
+      val e = freshEngine()
+      insertDemo(e, "c1")
+      insertDemo(e, "c2")
+      val h1 = get(e, "c1")
+      try {
+        // budget fits exactly one handle
+        sys.props("graft.serving.aggregate.bytes") = (bytes(h1) + 16).toString
+        Thread.sleep(2) // distinct lastUsed timestamps
+        val h2 = get(e, "c2") // over budget with h1 -> h1 (LRU) evicted
+        assert(get(e, "c2") eq h2, cache) // h2 is the cached resident
+        val h1b = get(e, "c1") // rebuilt or reloaded: the eviction was real
+        assert(!(h1b eq h1), cache)
+      } finally sys.props -= "graft.serving.aggregate.bytes"
+      // with the default budget both fit again and cache normally
+      val h2c = get(e, "c2")
+      assert(get(e, "c2") eq h2c, cache)
+    }
+    evictsLru("serving")((e, c) => e.serving(c).get)(_.estimatedBytes)
+    evictsLru("hnsw")((e, c) => e.servingHnsw(c).get)(_.estBytes)
   }
 
   test("serving tier: TTL rows are excluded at snapshot and expiry invalidates the handle") {
