@@ -76,9 +76,9 @@ object ServingSession {
       math.min(Runtime.getRuntime.availableProcessors(), math.max(1, nBlocks)),
       math.max(1, (workRows / math.max(1L, minRowsPerWorker)).toInt))
 
-  /** Work units below which the PQ scan stays serial: an ADC row is a
-    * handful of table adds, far cheaper than a float row, so the
-    * fork-join handoff pays off only past 64 Ki probed codes. */
+  /** Probed codes below which the IVF-PQ scan stays serial. An ADC row
+    * is `m` table adds rather than a dim-length float dot, so this sits
+    * above [[ParallelWorkThreshold]]. */
   private val PqParallelThreshold = 64 * 1024
 
   private def rank(heaps: Array[Kernels.TopKHeap], qids: Array[Long],

@@ -53,8 +53,9 @@ class ServingFanoutSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- the compressed and cell-pruned sessions ----------------------
 
   /** Serial (`rows + 1`), exactly 2-way (`rows / 2`), and the widths the
-    * exact tests above sweep — `rows` is the scanned (probed) row count
-    * of the session under test. */
+    * exact tests above sweep — `rows` is the scan's work in
+    * row-equivalents: probed rows for one query, rows × queries for a
+    * fleet (so a fleet's `n + 1` width above still fans out). */
   private def assertWidthInvariant[A](rows: Long, what: String)(run: => Seq[A]): Unit = {
     val widths = Seq(rows + 1, rows / 2, 8192L, 512L).map(_.toString)
     val ref = withProp(widths.head)(run)
@@ -94,11 +95,15 @@ class ServingFanoutSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   private lazy val ivfQueries = fleet(dim)
 
+  test("exact fleet rows identical from a serial scan up (work = rows x queries)") {
+    assertWidthInvariant(n.toLong * queries.size, "exact fleet")(idx.search(queries, 10))
+  }
+
   test("Sq8 searchOne and fleet rows identical across fan-out widths") {
     val sq8 = ServingSession.fromLocalRowsSq8(corpus(n, dim).iterator, dim)
     val fleetQ = ivfQueries.map { case (q, v) => (q, v.toArray) }
     assertWidthInvariant(n, "sq8 single")(sq8.searchOne(fleetQ.head._2, 10))
-    assertWidthInvariant(n, "sq8 fleet") {
+    assertWidthInvariant(n.toLong * fleetQ.size, "sq8 fleet") {
       val r = sq8.search(fleetQ, 10); assert(r.size === fleetQ.size * 10); r
     }
   }

@@ -65,8 +65,12 @@ cp -f /tmp/check_sf0.01.log /tmp/check.log   # the coverage gate reads this
 
 # 3. plan-grade audits: SHUFFLE_AUDIT.json regen (growth rule checked by
 #    the coverage gate below), WindowScan (unpartitioned windows),
-#    PLANS.md regen — one sbt JVM
-run plan_audits sbt -batch \
+#    PLANS.md regen — one sbt JVM. SPARK_GRAFT_CPUS is unset for this
+#    step only: the committed artifacts are generated at each tool's own
+#    default core count (ShuffleAudit 32, PlanDump 8), and a caller's
+#    value (e.g. the spec suite's nproc) would rewrite every partition
+#    count with the box's core count instead of the code's plan.
+run plan_audits env -u SPARK_GRAFT_CPUS sbt -batch \
   "runMain graft.tools.ShuffleAudit" \
   "runMain graft.tools.WindowScan" \
   "runMain graft.tools.PlanDump"
