@@ -32,7 +32,7 @@ private[graft] object BoundedCollect {
     * re-read on every call: unset or unparsable → `default`; a negative
     * value forces the fallback ([[tryCollect]] returns None without
     * running a job — the parity specs' switch). */
-  def limit(prop: String, default: Long): Long =
+  private def limit(prop: String, default: Long): Long =
     try sys.props.getOrElse(prop, default.toString).toLong
     catch { case _: NumberFormatException => default }
 
