@@ -71,30 +71,29 @@ final class HybridRetriever(
         emptyBranch
       }
 
-    // Interactive fast path: tenant-free retrieval over a collection
-    // with a resident serving snapshot skips the Spark job for this
-    // branch entirely (same rows; float-kernel scores within the
-    // documented tolerance). The hits are ALREADY driver-local and
+    // Interactive fast path: retrieval over a collection with a
+    // resident serving snapshot skips the Spark job for this branch
+    // entirely (same rows; float-kernel scores within the documented
+    // tolerance), tenant-scoped or not — the snapshot filters on the
+    // tenant inside its one scan. The hits are ALREADY driver-local and
     // eagerly computed, so they go straight into a local DataFrame —
     // no branch() wrapper (whose collect-and-relift exists to contain
     // lazy execution-time failures) and no extra job. A serving failure
     // degrades to the empty branch, like any branch failure; oversized
-    // or tenant-scoped collections stay on the distributed path.
+    // collections stay on the distributed path.
     val vec = if (!runVector) emptyBranch else {
       val served: Option[DataFrame] =
-        if (tenantId.isDefined) None
-        else
-          try engine.serving(collection).map { h =>
-            val qv = embedder.embed(query).map(_.toDouble).toSeq
-            h.search(qv, fetch)
-              .map(hit => (hit.id, hit.score, hit.content))
-              .toDF("id", "score", "content")
-              .withColumn("strategy", lit("vector"))
-          } catch { case e: Exception =>
-            events.emit("strategy:error", // serving fast path, same contract
-              Map("strategy" -> "vector", "error" -> String.valueOf(e.getMessage)))
-            Some(emptyBranch)
-          }
+        try engine.serving(collection).map { h =>
+          val qv = embedder.embed(query).map(_.toDouble).toSeq
+          h.search(qv, fetch, tenantId)
+            .map(hit => (hit.id, hit.score, hit.content))
+            .toDF("id", "score", "content")
+            .withColumn("strategy", lit("vector"))
+        } catch { case e: Exception =>
+          events.emit("strategy:error", // serving fast path, same contract
+            Map("strategy" -> "vector", "error" -> String.valueOf(e.getMessage)))
+          Some(emptyBranch)
+        }
       served.getOrElse(branch("vector") {
         val qv = embedder.embed(query).map(_.toDouble).toSeq
         engine.search(collection, qv, fetch, tenantId = tenantId)

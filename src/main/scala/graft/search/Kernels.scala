@@ -204,14 +204,47 @@ object Kernels {
     * ranking at declarative precision (the cancellation itself is
     * inherent to the identity and documented on [[scoreTile]]).
     *
-    * `invNormQ` = 1/‖q‖ (0 for a zero query), `norm2Q` = ‖q‖². */
+    * `invNormQ` = 1/‖q‖ (0 for a zero query), `norm2Q` = ‖q‖².
+    *
+    * `mask` (optional) is a filtered query's row predicate, indexed by
+    * row id: a row whose id bit is clear is skipped before its dot
+    * product, and each run of kept rows goes through the same loop an
+    * unmasked call runs, so a kept row's score and the heap's top-k
+    * are exactly those of the unmasked kernel over the kept rows.
+    * Returns the number of rows scored. */
   def scoreSingle(metric: Int, q: Array[Float], invNormQ: Double, norm2Q: Double,
                   xs: Array[Float], ids: Array[Long], n: Int,
-                  norm2: Array[Double], heap: TopKHeap): Unit = {
+                  norm2: Array[Double], heap: TopKHeap,
+                  mask: java.util.BitSet = null): Int =
+    if (mask eq null) {
+      scoreRows(metric, q, invNormQ, norm2Q, xs, ids, 0, n, norm2, heap)
+      n
+    } else {
+      var scored = 0
+      var r = 0
+      while (r < n) {
+        if (mask.get(ids(r).toInt)) {
+          val from = r
+          r += 1
+          while (r < n && mask.get(ids(r).toInt)) r += 1
+          scoreRows(metric, q, invNormQ, norm2Q, xs, ids, from, r, norm2, heap)
+          scored += r - from
+        } else r += 1
+      }
+      scored
+    }
+
+  /** [[scoreSingle]]'s loop over rows `from until until`. The mask
+    * test stays outside it: testing the mask inside this loop, once the
+    * JIT had also seen masked calls, made unmasked scans 15-30 % slower
+    * (10k × 64-D, both variants in one JVM on a 4-vCPU VM). */
+  private def scoreRows(metric: Int, q: Array[Float], invNormQ: Double, norm2Q: Double,
+                        xs: Array[Float], ids: Array[Long], from: Int, until: Int,
+                        norm2: Array[Double], heap: TopKHeap): Unit = {
     val dim = q.length
     val euclid = metric == MetricEuclidean
-    var r = 0
-    while (r < n) {
+    var r = from
+    while (r < until) {
       val off = r * dim
       var dot = 0.0
       if (euclid) {

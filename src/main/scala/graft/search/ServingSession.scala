@@ -205,9 +205,20 @@ object ServingSession {
       * distributed [[PackedIndex.Exact.search]] returns, no job.
       * Single-query calls route to [[Kernels.scoreSingle]] (vectorized
       * float lanes; near-tied ranks may differ from the fleet tile /
-      * declarative paths within the documented float tolerance). */
+      * declarative paths within the documented float tolerance).
+      *
+      * Two options apply to a single query only. `mask` restricts the
+      * scan to the rows whose id bit is set: a filtered query's
+      * predicate, tested inside the kernel before each dot product, so
+      * the result is the top-k of the kept rows and the fan-out sizes
+      * on the mask's cardinality. `scored` receives the number of rows
+      * scored. */
     def search(queries: Seq[(Long, Array[Double])], k: Int,
-               m: VectorSearch.Metric = VectorSearch.Cosine): Seq[(Long, Long, Double, Int)] = {
+               m: VectorSearch.Metric = VectorSearch.Cosine,
+               mask: java.util.BitSet = null,
+               scored: java.util.concurrent.atomic.LongAdder = null): Seq[(Long, Long, Double, Int)] = {
+      require(((mask eq null) && (scored eq null)) || queries.length == 1,
+        "a row mask and a scored-rows count apply to one query")
       val qids = queries.map(_._1).toArray
       val qVecs = queries.map(_._2.map(_.toFloat)).toArray
       if (qids.isEmpty || blocks.isEmpty) return Seq.empty
@@ -216,10 +227,12 @@ object ServingSession {
         if (qids.length == 1) {
           val qv = qVecs(0)
           val (n2, invNorm) = norms(qv)
-          fanOut(1, k, n, blocks.length) { () => (b, hs) =>
+          val work = if (mask eq null) n else mask.cardinality().toLong
+          fanOut(1, k, work, blocks.length) { () => (b, hs) =>
             val blk = blocks(b)
-            Kernels.scoreSingle(code, qv, invNorm, n2, blk.xs, blk.ids,
-              blk.ids.length, blk.norm2, hs(0))
+            val rows = Kernels.scoreSingle(code, qv, invNorm, n2, blk.xs, blk.ids,
+              blk.ids.length, blk.norm2, hs(0), mask)
+            if (scored ne null) scored.add(rows)
           }
         } else {
           // the query pack is read-only — built ONCE and shared by all

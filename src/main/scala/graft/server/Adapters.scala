@@ -142,11 +142,11 @@ final class EngineFacade(
       // Interactive surface: answer from the engine's resident serving
       // snapshot when the collection fits (no Spark job — sub-ms kernel
       // vs the per-job scheduling floor); tenant/metadata-equality
-      // filters are served too (exact post-filter with full-rerank
-      // fallback). Oversized collections fall back to the distributed
-      // path. Scores are float-kernel-computed: near-ties may order
-      // within the documented float tolerance of the job path (~1e-6
-      // relative at 64-D, grows with dimension).
+      // filters are served too (exact: a row mask the kernel applies
+      // in its one scan). Oversized collections fall back to the
+      // distributed path. Scores are float-kernel-computed: near-ties
+      // may order within the documented float tolerance of the job path
+      // (~1e-6 relative at 64-D, grows with dimension).
       engine.serving(coll) match {
         case Some(h) =>
           h.search(qv, topK, tenantId = tenant, metaEq = metaEq).map { hit =>

@@ -529,8 +529,9 @@ class FusionEngineSpec extends AnyFunSuite {
     val e = freshEngine()
     e.createCollection("fs", CollectionConfig(dimensions = 64))
     // 100 docs; two "rare" docs whose content is far from the query but
-    // which the metadata filter selects — they rank beyond the 4×topK
-    // over-fetch, forcing the exact full-rerank path
+    // which the metadata filter selects — they rank last unfiltered, so
+    // only a filter applied before ranking (the kernel's row mask)
+    // returns them
     val docs = (0 until 98).map(i => (s"d$i", s"chemical safety rule number $i", "common", s"t${i % 2}")) ++
       Seq(("rare1", "unrelated cooking recipe entirely", "rare", "t0"),
         ("rare2", "gardening tips for spring flowers", "rare", "t1"))
@@ -546,12 +547,12 @@ class FusionEngineSpec extends AnyFunSuite {
       e.search("fs", qv, k, tenantId = tenant, filter = mf)
         .select("id").collect().map(_.getString(0)).toSeq
     }
-    // metadata filter hitting only the 2 worst-ranked docs (fallback path)
+    // metadata filter hitting only the 2 worst-ranked docs
     val servedRare = h.search(qv, topK = 3, metaEq = Map("kind" -> "rare"))
     assert(servedRare.map(_.id) == jobIds(None, Map("kind" -> "rare"), 3))
     assert(servedRare.map(_.id).toSet == Set("rare1", "rare2"))
     assert(servedRare.map(_.rank) == Seq(1, 2))
-    // tenant filter (over-fetch path)
+    // tenant filter (half the rows)
     assert(h.search(qv, topK = 5, tenantId = Some("t1")).map(_.id) ==
       jobIds(Some("t1"), Map.empty, 5))
     // combined

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.FusionEngine
@@ -166,5 +167,52 @@ class HybridRetrieverSpec extends AnyFunSuite {
     val bad = loop.retrieveWithCritique("a", "zzzzz qqqqq wwwww")
     assert(bad.retried) // nothing matches -> quality below threshold -> retried
     assert(learning.feedbackLog("a").count() == 2)
+  }
+
+  test("tenant-scoped vector retrieval is served from the resident snapshot: the job path's rows, no Spark job") {
+    val engine = new FusionEngine(spark, Files.createTempDirectory("graft_hr_tenant").toString)
+    engine.createCollection("docs", CollectionConfig(dimensions = 64))
+    val topics = Seq("chemical hazard labels", "forklift operator training", "ladder inspection",
+      "fire extinguisher placement", "respirator fit testing", "lockout tagout steps",
+      "noise exposure limits", "first aid kit contents", "eye wash stations")
+    val docs = topics.zipWithIndex.map { case (t, i) =>
+      (s"d$i", s"$t for warehouse safety", if (i % 3 == 0) "globex" else "acme")
+    }
+    engine.insert("docs", Embed.withEmbedding(docs.toDF("id", "content", "tenant_id"),
+      "content", "vector", embedder))
+    val r = new HybridRetriever(engine, embedder, "docs")
+    val q = "chemical safety training"
+    val (k, tenant) = (3, Some("acme"))
+    r.retrieve(q, k, "vector", tenant).collect() // warm: builds the serving snapshot
+
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b)))
+    }
+    def inGroup[A](group: String)(body: => A): A = {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val served = try {
+      val df = inGroup("retrieve")(r.retrieve(q, k, "vector", tenant))
+      // the bus delivers in order: once the marker job is seen, so is the above
+      inGroup("marker")(spark.range(1).collect())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.containsKey("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.getOrDefault("retrieve", 0).intValue == 0,
+        s"tenant-scoped vector retrieval ran ${jobs.get("retrieve")} Spark jobs")
+      df.collect().toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val qv = embedder.embed(q).map(_.toDouble).toSeq
+    val jobBranch = engine.search("docs", qv, 2 * k, tenantId = tenant)
+      .select($"id", $"score", $"content", lit("vector").as("strategy"))
+    val expected = HybridRetriever.fuse(Seq(jobBranch), k).collect().toSeq
+    assert(expected.size == k)
+    assert(served == expected)
+    assert(served.map(_.getString(0)).forall(id => docs.exists(d => d._1 == id && d._3 == "acme")))
   }
 }
