@@ -1608,8 +1608,9 @@ object Bench {
         val snapSec = (System.nanoTime() - tSnap) / 1e9
         val rest = g.restServer(0)
         val port = rest.start()
-        // stop in finally: the dispatcher thread is non-daemon — a probe
-        // failure would otherwise keep the bench JVM alive forever
+        // stop in finally: the JDK server's dispatcher thread is
+        // non-daemon (its graft-rest-N workers are daemon threads) — a
+        // probe failure would otherwise keep the bench JVM alive forever
         try {
           // keep-alive socket client: measures server + RTT, not the
           // JDK HttpClient's per-send async overhead (~0.7 ms here)

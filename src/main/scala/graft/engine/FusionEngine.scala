@@ -463,6 +463,8 @@ final class FusionEngine(val spark: SparkSession, val root: String) {
   }
 
   private val servingCache = new java.util.concurrent.ConcurrentHashMap[String, ServingHandle]()
+  // one monitor per collection, held while its snapshot is (re)built
+  private val servingBuildLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   // Monotonic per-collection write counter, bumped by THIS engine's write
   // paths: closes the same-millisecond (or coarse-mtime-filesystem) hole
   // where a write lands without changing the data dir's mtime. External
@@ -479,24 +481,29 @@ final class FusionEngine(val spark: SparkSession, val root: String) {
     * estimated resident footprint exceeds `maxBytes` (default 4 GiB) —
     * callers fall back to the distributed [[search]] path, which remains
     * the source of truth. A cap miss on a still-valid cached handle
-    * leaves the cache untouched for other callers. */
+    * leaves the cache untouched for other callers. Single-flight:
+    * concurrent readers that find the handle stale or missing build it
+    * once; the others wait for it and share it. */
   def serving(name: String, maxBytes: Long = FusionEngine.DefaultServingBytes): Option[ServingHandle] = {
     val cfg = getConfig(name)
     val ver = dataVersion(name)
-    val cached = servingCache.get(name)
-    if (cached != null && !cached.stale(ver)) {
-      if (cached.estBytes <= maxBytes) {
-        cached.lastUsedMs = System.currentTimeMillis()
-        Some(cached)
-      } else None // over this caller's cap; keep the handle for others
-    } else {
-      servingCache.remove(name)
-      val built = buildServing(name, cfg, ver, maxBytes)
-      // AGGREGATE budget across all cached snapshots (review r4: N
-      // collections each under the per-collection cap could otherwise
-      // pin N × cap of driver memory)
-      built.foreach(h => cacheWithinBudget(servingCache, name, h)(_.estBytes, _.lastUsedMs))
-      built
+    def fresh = Option(servingCache.get(name)).filterNot(_.stale(ver))
+    val handle = fresh.orElse(servingBuildLocks.computeIfAbsent(name, _ => new AnyRef).synchronized {
+      // another reader may have built it while this one waited
+      fresh.orElse {
+        servingCache.remove(name)
+        val built = buildServing(name, cfg, ver, maxBytes)
+        // AGGREGATE budget across all cached snapshots (review r4: N
+        // collections each under the per-collection cap could otherwise
+        // pin N × cap of driver memory)
+        built.foreach(h => cacheWithinBudget(servingCache, name, h)(_.estBytes, _.lastUsedMs))
+        built
+      }
+    })
+    // over this caller's cap: None, but keep the handle for others
+    handle.filter(_.estBytes <= maxBytes).map { h =>
+      h.lastUsedMs = System.currentTimeMillis()
+      h
     }
   }
 
@@ -870,6 +877,9 @@ final class FusionEngine(val spark: SparkSession, val root: String) {
   // instrumentation for specs (prove warm start skipped the rebuild)
   private[graft] val hnswFullBuilds = new java.util.concurrent.atomic.AtomicLong()
   private[graft] val hnswDiskLoads = new java.util.concurrent.atomic.AtomicLong()
+  /** Resident serving snapshots built (first builds and rebuilds after
+    * a write or a TTL expiry). */
+  private[graft] val servingBuilds = new java.util.concurrent.atomic.AtomicLong()
 
   /** Collection version = data-dir mtime combined with this engine's
     * write counter (see [[bumpWrite]]). */
@@ -907,6 +917,7 @@ final class FusionEngine(val spark: SparkSession, val root: String) {
     // floats + ids/norms + JVM string/map overhead per row + chars
     val est = n * (cfg.dimensions.toLong * 4 + 16 + 128) + (contentChars + metaChars) * 2
     if (n == 0 || est > maxBytes) return None
+    servingBuilds.incrementAndGet()
     // id-ordered snapshot: the kernel's long tie-break then equals the
     // job path's `ASC id` string tie-break
     val rows = src.select(col("id"), col("vector"), col("content"),

@@ -32,11 +32,13 @@ final class RagPipeline(
   val events = new graft.events.EventBus
 
   /** Lazy collection creation with dims from the embedder
-    * (`RAGPipeline.js:58-70`). */
-  def init(): Unit =
+    * (`RAGPipeline.js:58-70`). Synchronized: concurrent first queries
+    * would otherwise both try to create the collection. */
+  def init(): Unit = synchronized {
     if (!engine.hasCollection(collection))
       engine.createCollection(collection,
         CollectionConfig(dimensions = embedder.dimensions, distanceMetric = "cosine"))
+  }
 
   /** Chunk rows for a corpus: `(doc_id, chunk_index, total_chunks,
     * content)` with chunk id `${doc}_chunk_${i}` (`RAGPipeline.js:101`).

@@ -2,6 +2,7 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -105,8 +106,22 @@ final class EngineFacade(
   private def retriever(collection: String) =
     new HybridRetriever(engine, embedder, collection, Some(tree))
 
-  /** Dispatch one operation; returns a JSON string. Unknown op throws. */
-  def call(op: String, body: String): String = op match {
+  /** Held shared by reads and exclusively by writes (see [[call]]). */
+  private[graft] val lock = new java.util.concurrent.locks.ReentrantReadWriteLock()
+
+  /** Dispatch one operation; returns a JSON string. Unknown op throws.
+    * Safe to call from many threads: reads overlap, while a write
+    * ([[EngineFacade.WriteOps]]) runs alone, so any pair of calls that
+    * involves a write stays serialized. `health` takes no lock. */
+  def call(op: String, body: String): String =
+    if (op == "health") dispatch(op, body)
+    else {
+      val l = if (EngineFacade.WriteOps(op)) lock.writeLock() else lock.readLock()
+      l.lock()
+      try dispatch(op, body) finally l.unlock()
+    }
+
+  private def dispatch(op: String, body: String): String = op match {
     case "health" => """{"status":"ok","engine":"graft"}"""
 
     case "list_collections" =>
@@ -245,8 +260,22 @@ final class EngineFacade(
     }.mkString("[", ",", "]")
 }
 
+object EngineFacade {
+  /** Ops that write, and so run under the facade's write lock.
+    * `memory_recall` is one: it appends to the agent access log, and two
+    * Spark appends to one parquet directory must not overlap. */
+  val WriteOps: Set[String] = Set("create_collection", "insert", "rag_ingest", "tree_index",
+    "memory_remember", "memory_learn", "memory_recall", "memory_share", "memory_forget",
+    "conversation_add")
+}
+
 /** REST adapter on the JDK HttpServer — route table mirroring
-  * `HTTPServer.js:88-177`. */
+  * `HTTPServer.js:88-177`. Requests run on a fixed pool of daemon
+  * worker threads (`graft-rest-N`), one per core and at least two, so
+  * reads run in parallel; the facade's lock keeps writes serialized. A
+  * request body over [[RestServer.MaxBodyBytes]] gets 413; an unexpected
+  * failure gets a fixed 500 body, and the exception goes to [[events]]
+  * as `request:error`. */
 final class RestServer(facade: EngineFacade, port: Int = 0) {
   import Adapters._
 
@@ -282,17 +311,33 @@ final class RestServer(facade: EngineFacade, port: Int = 0) {
     ("POST", "/api/conversation/add") -> "conversation_add",
     ("POST", "/api/conversation/get") -> "conversation_get")
 
+  // one worker per core, and at least two, so that `/health` is answered
+  // while a slow request runs even on a one-core host
+  private val workers = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    Executors.newFixedThreadPool(math.max(2, Runtime.getRuntime.availableProcessors()), (r: Runnable) => {
+      val t = new Thread(r, s"graft-rest-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  server.setExecutor(workers)
   server.createContext("/", (ex: HttpExchange) => {
     val key = (ex.getRequestMethod, ex.getRequestURI.getPath)
     val (status, body) = routes.get(key) match {
       case None => (404, s"""{"error":"no route ${key._1} ${key._2}"}""")
       case Some(op) =>
-        val in = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        try (200, facade.call(op, in))
+        val in = ex.getRequestBody.readNBytes(RestServer.MaxBodyBytes + 1)
+        if (in.length > RestServer.MaxBodyBytes)
+          (413, s"""{"error":"request body over ${RestServer.MaxBodyBytes} bytes"}""")
+        else try (200, facade.call(op, new String(in, StandardCharsets.UTF_8)))
         catch {
           case e: IllegalArgumentException => (400, s"""{"error":${jstr(e.getMessage)}}""")
-          case e: Exception => (500, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
+          case e: Exception =>
+            events.emit("request:error", Map("op" -> op, "error" -> e))
+            (500, """{"error":"internal error"}""")
         }
     }
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -303,7 +348,8 @@ final class RestServer(facade: EngineFacade, port: Int = 0) {
   })
 
   /** Event hooks (`MCPServer.js:153` emits started {transport, port}
-    * on listen; the HTTP surface carries the same hook here). */
+    * on listen; the HTTP surface carries the same hook here), plus
+    * `request:error` {op, error} for each request answered 500. */
   val events = new graft.events.EventBus
 
   def start(): Int = {
@@ -312,7 +358,22 @@ final class RestServer(facade: EngineFacade, port: Int = 0) {
     events.emit("started", Map("transport" -> "http", "port" -> p))
     p
   }
-  def stop(): Unit = server.stop(0)
+
+  /** Stops accepting, then stops the worker threads. */
+  def stop(): Unit = {
+    server.stop(0)
+    workers.shutdownNow()
+    workers.awaitTermination(10, TimeUnit.SECONDS)
+  }
+}
+
+object RestServer {
+  /** Largest request body served; a larger one gets 413 and is not read
+    * past this cap. 8 MiB holds a few million characters of document
+    * text for `rag/ingest`, far above any request the specs or the
+    * bench send, while bounding what one request can make the server
+    * buffer. */
+  val MaxBodyBytes: Int = 8 << 20
 }
 
 /** MCP adapter: the reference's 11-tool manifest

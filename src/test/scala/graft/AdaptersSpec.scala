@@ -3,12 +3,16 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
+import java.time.Duration
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.FusionEngine
 import graft.memory.AgentMemory
-import graft.providers.MockEmbedderProvider
+import graft.providers.{Embed, Embedder, MockEmbedderProvider}
 import graft.rag.RagPipeline
 import graft.server.{EngineFacade, McpServer, RestServer}
 import graft.tree.TreeIndex
@@ -18,10 +22,34 @@ import graft.tree.TreeIndex
   * non-empty, tool call works, unknown tool errors). */
 class AdaptersSpec extends AnyFunSuite {
   import TestSpark.spark
+  import spark.implicits._
 
-  private def facade(): EngineFacade = {
+  private def uri(port: Int, path: String) = URI.create(s"http://127.0.0.1:$port$path")
+
+  private def postReq(port: Int, path: String, body: String): HttpRequest =
+    HttpRequest.newBuilder(uri(port, path)).timeout(Duration.ofSeconds(30))
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+
+  private def getReq(port: Int, path: String): HttpRequest =
+    HttpRequest.newBuilder(uri(port, path)).timeout(Duration.ofSeconds(30)).GET().build()
+
+  private def liveRestWorkers: Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && t.getName.startsWith("graft-rest-")).toSet
+
+  /** The mock embedder, except that embedding `held` waits for `release`. */
+  private final class HoldingEmbedder(held: String, entered: CountDownLatch, release: CountDownLatch)
+      extends Embedder {
+    private val inner = new MockEmbedderProvider(64)
+    val model: String = inner.model
+    val dimensions: Int = inner.dimensions
+    def embedBatch(texts: Seq[String]): Seq[Array[Float]] = {
+      if (texts.contains(held)) { entered.countDown(); release.await() }
+      inner.embedBatch(texts)
+    }
+  }
+
+  private def facade(embedder: Embedder = new MockEmbedderProvider(64)): EngineFacade = {
     val engine = new FusionEngine(spark, Files.createTempDirectory("graft_srv").toString)
-    val embedder = new MockEmbedderProvider(64)
     val memory = new AgentMemory(engine, embedder)
     val rag = new RagPipeline(engine, embedder, chunkSize = 120, chunkOverlap = 20)
     val tree = new TreeIndex(spark, Files.createTempDirectory("graft_srv_tree").toString)
@@ -210,5 +238,129 @@ class AdaptersSpec extends AnyFunSuite {
       assert(contextJobs > 0 && queryJobs <= contextJobs,
         s"rag_query ran $queryJobs jobs; building its context alone runs $contextJobs")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("REST: 4 keep-alive clients get the serial answers byte for byte; stop leaves no worker") {
+    val f = facade()
+    f.call("create_collection", """{"name": "conc", "dimensions": 64}""")
+    val docs = (0 until 400).map(i =>
+      (s"c$i", s"document $i on topic ${i % 23} and subject ${i % 7}", s"t${i % 8}", Map("team" -> s"g${i % 3}")))
+    f.engine.insert("conc", Embed.withEmbedding(
+      docs.toDF("id", "content", "tenant_id", "metadata"), "content", "vector", f.embedder))
+    // every 8th body is filtered, by tenant or by metadata equality
+    val bodies = (0 until 64).map { i =>
+      val base = s""""collection": "conc", "query": "topic ${i % 23} subject ${i % 7}", "topK": ${5 + i % 6}"""
+      if (i % 8 != 0) s"{$base}"
+      else if (i % 16 == 0) s"""{$base, "tenantId": "t${i / 16}"}"""
+      else s"""{$base, "filter": {"team": "g${i % 3}"}}"""
+    }
+    val srv = new RestServer(f)
+    val port = srv.start()
+    try {
+      val serial = {
+        val c = new graft.tools.KeepAliveHttp("127.0.0.1", port)
+        try bodies.map(b => c.post("/api/search", b)) finally c.close()
+      }
+      assert(serial.forall(_.contains("\"id\"")))
+      val (clients, perClient) = (4, 250)
+      val mismatches = new ConcurrentLinkedQueue[String]()
+      val failures = new ConcurrentLinkedQueue[Throwable]()
+      val threads = (0 until clients).map { c =>
+        new Thread(() => {
+          try {
+            val http = new graft.tools.KeepAliveHttp("127.0.0.1", port)
+            try (0 until perClient).foreach { j =>
+              val i = (c * 16 + j) % bodies.length
+              if (http.post("/api/search", bodies(i)) != serial(i)) mismatches.add(bodies(i))
+            } finally http.close()
+          } catch { case e: Throwable => failures.add(e) }
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join(120000))
+      assert(failures.isEmpty, failures.asScala.headOption.map(_.toString).getOrElse(""))
+      assert(mismatches.isEmpty, s"${mismatches.size} answers differ, e.g. ${mismatches.peek()}")
+    } finally srv.stop()
+    val deadline = System.nanoTime() + 10000000000L
+    while (liveRestWorkers.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(liveRestWorkers.isEmpty, liveRestWorkers.map(_.getName))
+  }
+
+  test("REST: /health answers while a search is held inside the facade; a held write lock holds reads only") {
+    val (entered, release) = (new CountDownLatch(1), new CountDownLatch(1))
+    val f = facade(new HoldingEmbedder("hold", entered, release))
+    f.call("create_collection", """{"name": "held", "dimensions": 64}""")
+    val srv = new RestServer(f)
+    val port = srv.start()
+    val client = HttpClient.newHttpClient()
+    def send(r: HttpRequest) = client.sendAsync(r, HttpResponse.BodyHandlers.ofString())
+    try {
+      val held = send(postReq(port, "/api/search", """{"collection": "held", "query": "hold"}"""))
+      assert(entered.await(30, TimeUnit.SECONDS), "the search reached the embedder")
+      assert(client.send(getReq(port, "/health"), HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      assert(!held.isDone)
+      release.countDown()
+      assert(held.get(60, TimeUnit.SECONDS).statusCode() == 200)
+
+      // a write holds every read back, but not /health
+      val write = f.lock.writeLock()
+      write.lock()
+      val read =
+        try {
+          val r = send(getReq(port, "/api/collections"))
+          val deadline = System.nanoTime() + 30000000000L
+          while (!f.lock.hasQueuedThreads && System.nanoTime() < deadline) Thread.sleep(5)
+          assert(f.lock.hasQueuedThreads, "the read waits on the lock")
+          assert(client.send(getReq(port, "/health"), HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+          assert(!r.isDone)
+          r
+        } finally write.unlock()
+      val listed = read.get(60, TimeUnit.SECONDS)
+      assert(listed.statusCode() == 200 && listed.body().contains("\"held\""))
+    } finally { release.countDown(); srv.stop() }
+  }
+
+  test("REST: a body one byte over the cap gets 413; the next request on a new connection gets 200") {
+    val srv = new RestServer(facade())
+    val port = srv.start()
+    try {
+      val cap = RestServer.MaxBodyBytes
+      val over = HttpClient.newHttpClient().send(postReq(port, "/api/search", " " * (cap + 1)),
+        HttpResponse.BodyHandlers.ofString())
+      assert(over.statusCode() == 413, over.body())
+      // a body of exactly the cap is read and answered by the facade
+      val atCap = HttpClient.newHttpClient().send(postReq(port, "/api/search", " " * cap),
+        HttpResponse.BodyHandlers.ofString())
+      assert(atCap.statusCode() == 400 && atCap.body().contains("collection required"))
+      val next = HttpClient.newHttpClient().send(getReq(port, "/api/collections"),
+        HttpResponse.BodyHandlers.ofString())
+      assert(next.statusCode() == 200)
+    } finally srv.stop()
+  }
+
+  test("REST: an unexpected facade failure answers a fixed 500 body and reports the exception as an event") {
+    val srv = new RestServer(facade())
+    val errors = new ConcurrentLinkedQueue[Map[String, Any]]()
+    srv.events.on("request:error")(p => errors.add(p))
+    val port = srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      // a search on a missing collection throws NoSuchElementException
+      val r = client.send(postReq(port, "/api/search", """{"collection": "nowhere", "query": "q"}"""),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 500 && r.body() == """{"error":"internal error"}""")
+      assert(errors.size == 1)
+      val ev = errors.peek()
+      assert(ev("op") == "search")
+      ev("error") match {
+        case e: NoSuchElementException => assert(e.getMessage.contains("nowhere"))
+        case other => fail(s"unexpected error payload $other")
+      }
+      // a client error keeps its message
+      val bad = client.send(postReq(port, "/api/search", """{"query": "q"}"""),
+        HttpResponse.BodyHandlers.ofString())
+      assert(bad.statusCode() == 400 && bad.body().contains("collection required"))
+      assert(errors.size == 1)
+    } finally srv.stop()
   }
 }

@@ -73,6 +73,31 @@ class FusionEngineSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](h2.search(Seq(1.0, 2.0), topK = 1))
   }
 
+  test("serving tier: concurrent readers after a write build the snapshot once and share it") {
+    val e = freshEngine()
+    insertDemo(e)
+    e.serving("demo").getOrElse(fail("4 docs must fit the serving cap"))
+    Thread.sleep(5) // dir mtime granularity
+    e.insert("demo", Embed.withEmbedding(
+      Seq("d5" -> "one more row").toDF("id", "content"), "content", "vector", embedder))
+    val before = e.servingBuilds.get
+    val readers = 8
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(readers)
+    try {
+      val got = (1 to readers).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Option[e.ServingHandle]] {
+          def call(): Option[e.ServingHandle] = { start.await(); e.serving("demo") }
+        }))
+      start.countDown()
+      val handles = got.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)
+        .getOrElse(fail("5 docs must fit the serving cap")))
+      assert(e.servingBuilds.get - before == 1, "one build for all readers")
+      assert(handles.forall(_ eq handles.head))
+      assert(handles.head.size == 5)
+    } finally pool.shutdownNow()
+  }
+
   test("servingHnsw: matches exact search at ef >= n, invalidates on write, cosine-only") {
     val e = freshEngine()
     insertDemo(e)
